@@ -85,7 +85,7 @@ def test_overlap_exception_type_contract(spark, tmp_path):
     """The overlap raise is the DEDICATED DsirOverlapError (a
     ValueError subclass — the historical contract holds) while a
     feature-space contract error is a plain ValueError: the two-fold
-    init-race retry (_dsir_store_for) catches only the former, so a
+    init-race retry (_dsir_two_fold_init) catches only the former, so a
     genuine contract bug surfaces directly instead of through a
     confusing second failure from a pointless skip_existing retry."""
     path = str(tmp_path / "m5")

@@ -323,8 +323,8 @@ def test_bpe_segment_rejects_symbols_outside_alphabet(spark, monkeypatch):
     import pytest
 
     monkeypatch.setitem(
-        llm_ops._BPE_CACHE,
-        "/bad/corpus",
+        llm_ops._ARTIFACT_CACHE,
+        ("bpe_merges", "/bad/corpus"),
         [(1, "a'; drop", "b", "a'; dropb", 1)],
     )
     import os

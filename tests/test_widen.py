@@ -71,5 +71,12 @@ def test_noop_when_directory_backed_table_is_wide(spark, tmp_path):
         # shrink the split size so this small dir is "wide" for real
         spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
         assert widen_if_narrow(docs, str(tmp_path)) is docs
+        # Spark's largest byte-string suffixes: a split this big makes
+        # the same dir narrow, so the frame widens (never a parse error)
+        for big in ("1t", "2p"):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", big)
+            out = widen_if_narrow(docs, str(tmp_path))
+            target = spark.sparkContext.defaultParallelism
+            assert out.rdd.getNumPartitions() == target
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)

@@ -73,16 +73,6 @@ def para_store(spark: SparkSession, path: str) -> TableStore:
     return TableStore(spark, path, PARA_INDEX_SCHEMA)
 
 
-def save_paragraph_index(
-    spark: SparkSession, path: str, index: DataFrame
-) -> int:
-    return para_store(spark, path).commit(
-        index.select("para", "first_doc", "first_pos"),
-        n_files=4,
-        cluster_by=["para"],
-    )
-
-
 def load_paragraph_index(spark: SparkSession, path: str) -> DataFrame | None:
     store = para_store(spark, path)
     if not store.exists() or store.current_version() is None:

@@ -452,15 +452,6 @@ def kmeans_centroids(
     )
 
 
-def ivf_centroids(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """The (tiny, broadcastable) trained centroid table in tick space."""
-    return kmeans_centroids(embeddings, id_col=id_col, vec_col=vec_col).select(
-        "centroid_id", "centroid_ticks"
-    )
-
-
 def ivf_assign(
     embeddings: DataFrame,
     id_col: str = "vec_id",

@@ -734,23 +734,6 @@ def nfc_audit_summary(docs, text_col: str = "text", id_col: str = "doc_id"):
     return _arrow_doc_audit(docs, id_col, text_col, fields, _nfc_row)
 
 
-def lang_marker_score(col: Column | str, lang: str) -> Column:
-    """How many marker-word occurrences of ``lang`` the text contains —
-    the single-language reference face of ``lang_id``'s fused
-    marker-map scoring (same 1000x-distinct + occurrences formula the
-    oracle SQL replays; lang_id computes all languages in one pass)."""
-    toks = tokens(col)
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-    return F.array_size(F.array_intersect(F.array_distinct(toks), markers)) * 1000 + (
-        F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: acc
-            + F.when(F.array_contains(markers, t), 1).otherwise(0),
-        )
-    )
-
-
 def lang_id(col: Column | str) -> Column:
     """Argmax language guess over the marker families.
 

@@ -14,6 +14,8 @@ exercised, not vacuously empty.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,12 +29,16 @@ from tinyerp_etl_spark.operators import text as X
 from tinyerp_etl_spark.sources.catalog import load_table, widen_if_narrow
 from tinyerp_etl_spark.functions.localdf import local_df
 
-# ---- persisted IVF index plumbing (operators/ivf_index.py) ---------------
-# Process-level cache of the loaded index per corpus dir: the gate
-# driver runs many queries in one process, and several queries (ivf
-# top-k, semantic dedup, the roundtrip gate) score through the same
-# artifact — load it once: (index, artifact path, corpus fingerprint).
-_IVF_CACHE: dict[str, tuple[list[tuple[int, list[int]]], str, tuple[int, int]]] = {}
+# ---- persisted index artifacts ------------------------------------------
+# One process cache for every content-addressed artifact family, keyed by
+# (kind, abspath(sf_dir)): the correctness gate runs many queries in
+# one process, and several score through the same artifact (ivf top-k,
+# semantic dedup, the roundtrip gate) — stage and load it once.
+_ARTIFACT_CACHE: dict[tuple[str, str], Any] = {}
+
+#: kind -> stage(spark, sf_dir, *args) -> (corpus fingerprint | None,
+#: build(path) -> artifact); each family registers next to its queries
+_ARTIFACT_KINDS: dict[str, Callable] = {}
 
 
 def _artifact_root() -> str:
@@ -48,44 +54,47 @@ def _artifact_root() -> str:
     )
 
 
-def _ivf_artifact_for(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list[tuple[int, list[int]]], str, tuple[int, int]]:
-    """(index, artifact path, corpus fingerprint) for a corpus dir.
+def _persisted_artifact(kind: str, spark: SparkSession, sf_dir: str, *args) -> Any:
+    """The artifact of family ``kind`` for a corpus dir, process-cached.
 
-    Query-path operators must NOT train k-means per invocation (the
-    round-6 9.95x regression and a genuine 100 TB anti-pattern: index
-    construction in the query path). This loads the persisted
-    TableStore artifact — one fingerprint scan to validate, k rows to
-    read — and only trains (then persists) when the artifact is
-    missing or stale. Correctness is still gate-proven per query: the
-    DuckDB oracles re-derive the centroids by unrolled SQL training,
-    so a wrong/stale loaded index hash-mismatches immediately.
-
-    The fingerprint is computed FIRST (one column-pruned aggregate)
-    because the artifact directory is keyed by it (_corpus_tag) — and
-    passed down so load_or_train does not scan a second time.
-    """
-    key = os.path.abspath(sf_dir)
-    if key not in _IVF_CACHE:
-        from tinyerp_etl_spark.operators.ivf_index import (
-            corpus_fingerprint,
-            embedding_content,
-            load_or_train_ivf_index,
-        )
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        fp = corpus_fingerprint(emb, content=embedding_content())
-        path = os.path.join(_artifact_root(), "ivf_index", _corpus_tag(sf_dir, fp))
-        cents = load_or_train_ivf_index(spark, emb, path, fingerprint=fp)
-        _IVF_CACHE[key] = (cents, path, fp)
-    return _IVF_CACHE[key]
+    Indexes build at ingest, never per query. A cold call runs the
+    family's stage, which computes the corpus fingerprint FIRST (the
+    directory ``<root>/<kind>/<_corpus_tag>`` is keyed by it) and
+    returns ``build(path)``: load the persisted artifact, building and
+    persisting it only when missing or stale. A fingerprint of None
+    means nothing persists (path None). The cache check comes first,
+    so a warm call runs no Spark job. The DuckDB oracles re-derive
+    every artifact from scratch, so a stale one hash-mismatches."""
+    key = (kind, os.path.abspath(sf_dir))
+    if key not in _ARTIFACT_CACHE:
+        fp, build = _ARTIFACT_KINDS[kind](spark, sf_dir, *args)
+        path = None
+        if fp is not None:
+            path = os.path.join(_artifact_root(), kind, _corpus_tag(sf_dir, fp))
+        _ARTIFACT_CACHE[key] = build(path)
+    return _ARTIFACT_CACHE[key]
 
 
-def _ivf_index_for(spark: SparkSession, sf_dir: str) -> list[tuple[int, list[int]]]:
-    """The loaded-or-trained IVF index for a corpus dir (see
-    _ivf_artifact_for)."""
-    return _ivf_artifact_for(spark, sf_dir)[0]
+def _ivf_index_stage(spark: SparkSession, sf_dir: str):
+    """(index, artifact path, corpus fingerprint) of the IVF index:
+    one fingerprint scan to validate, k rows to read; trains only when
+    the artifact is missing or stale."""
+    from tinyerp_etl_spark.operators.ivf_index import (
+        corpus_fingerprint,
+        embedding_content,
+        load_or_train_ivf_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    fp = corpus_fingerprint(emb, content=embedding_content())
+    return fp, lambda path: (
+        load_or_train_ivf_index(spark, emb, path, fingerprint=fp),
+        path,
+        fp,
+    )
+
+
+_ARTIFACT_KINDS["ivf_index"] = _ivf_index_stage
 
 
 def _corpus_tag(sf_dir: str, fingerprint: tuple[int, int]) -> str:
@@ -247,30 +256,28 @@ def bm25i_retrieval_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return X.bm25i_topk(docs, ["dup", "spark", "window"], k=10)
 
 
-# process-level handle on the persisted BM25 index per corpus dir
-_BM25_CACHE: dict[str, tuple] = {}
-
-
-def _bm25_index_for(spark: SparkSession, sf_dir: str):
+def _bm25_index_stage(spark: SparkSession, sf_dir: str):
     """(postings, stats) for a corpus dir — persisted TableStore
     artifacts (operators/bm25_index.py), loaded with a one-scan
     fingerprint check, built-and-persisted only when missing/stale.
-    The tokenizer thus runs at ingest, never per query — the same
-    train-at-ingest flow as _ivf_index_for."""
-    key = os.path.abspath(sf_dir)
-    if key not in _BM25_CACHE:
-        from tinyerp_etl_spark.operators import bm25_index as B
+    The tokenizer thus runs at ingest, never per query."""
+    from tinyerp_etl_spark.operators import bm25_index as B
 
-        docs = load_table(spark, sf_dir, "documents")
-        fp = corpus_fingerprint_docs(docs)
-        path = os.path.join(_artifact_root(), "bm25_index", _corpus_tag(sf_dir, fp))
+    docs = load_table(spark, sf_dir, "documents")
+    fp = corpus_fingerprint_docs(docs)
+
+    def build(path: str):
         loaded = B.load_bm25_index(spark, path, expect_fingerprint=fp)
         if loaded is None:
             B.save_bm25_index(spark, path, docs)
             loaded = B.load_bm25_index(spark, path, expect_fingerprint=fp)
             assert loaded is not None, "bm25 index write did not round-trip"
-        _BM25_CACHE[key] = loaded
-    return _BM25_CACHE[key]
+        return loaded
+
+    return fp, build
+
+
+_ARTIFACT_KINDS["bm25_index"] = _bm25_index_stage
 
 
 def bm25i_index_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,7 +288,7 @@ def bm25i_index_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-scan oracle, so indexed ≡ scan is hash-proven."""
     from tinyerp_etl_spark.operators import bm25_index as B
 
-    postings, stats = _bm25_index_for(spark, sf_dir)
+    postings, stats = _persisted_artifact("bm25_index", spark, sf_dir)
     return B.bm25i_topk_indexed(postings, stats, ["dup", "spark", "window"], k=10)
 
 
@@ -362,7 +369,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     one ranking."""
     from tinyerp_etl_spark.operators import bm25_index as B
 
-    postings, stats = _bm25_index_for(spark, sf_dir)
+    postings, stats = _persisted_artifact("bm25_index", spark, sf_dir)
     text_rows = B.bm25i_topk_indexed(
         postings, stats, ["dup", "spark", "window"], k=RRF_TOPN
     ).collect()
@@ -680,13 +687,12 @@ def embedding_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-list top-10 neighbors of vec_id=0 (nprobe=2 of 8 trained
-    lists), scoring through the PERSISTED index (_ivf_index_for) —
+    lists), scoring through the PERSISTED index ("ivf_index") —
     train at ingest, prune at query. The oracle trains its centroids
     from scratch in SQL, so this row also proves loaded ≡ trained."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_topk(
-        emb, query_vec_id=0, k=10, centroids=_ivf_index_for(spark, sf_dir)
-    )
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
+    return S.ivf_topk(emb, query_vec_id=0, k=10, centroids=cents)
 
 
 def ivf_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -709,7 +715,7 @@ def ivf_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tinyerp_etl_spark.etl.table_store import TableStore
 
-    cents = _ivf_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = S.ivf_assign_narrow(emb, centroids=cents)
 
@@ -778,7 +784,7 @@ def ivf_assign_narrow_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained-index assignment — the streaming ingest path writes
     exactly the partitions the batch layout and the pruned queries
     expect."""
-    cents = _ivf_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
     emb = load_table(spark, sf_dir, "embeddings")
     return (
         S.ivf_assign_narrow(emb, centroids=cents)
@@ -815,8 +821,8 @@ def kmeans_centroids_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted-index round-trip: the COMMITTED artifact (the store
     embedding_topk_ivf / semantic_dedup_embeddings score through,
-    written at train time by _ivf_artifact_for) re-loaded with full
-    param + corpus-fingerprint validation must be bit-identical to
+    written at train time as the "ivf_index" artifact) re-loaded with
+    full param + corpus-fingerprint validation must be bit-identical to
     the in-process index — and, because the oracle re-derives the
     centroids by unrolled SQL training, also identical to
     freshly-trained centroids. Any serialization drift (tick
@@ -832,7 +838,7 @@ def ivf_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivf_index.py). operators/ivf_index.py."""
     from tinyerp_etl_spark.operators import ivf_index as IX
 
-    cents, path, fp = _ivf_artifact_for(spark, sf_dir)
+    cents, path, fp = _persisted_artifact("ivf_index", spark, sf_dir)
     loaded = IX.load_ivf_index(
         spark,
         path,
@@ -931,7 +937,7 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantic layer of the dedup stack (after exact/MinHash, which
     see no shared n-grams in a paraphrase). operators/similarity.py:
     semantic_dedup; cluster assignment is ivf_assign over the
-    PERSISTED index trained on the base corpus (_ivf_index_for) — the
+    PERSISTED index trained on the base corpus ("ivf_index") — the
     ingest-time index classifies the incoming staged batch, exactly
     the at-scale flow — and the oracle replicates training (on the
     base corpus) + assignment (of the staged rows) in SQL
@@ -951,9 +957,10 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = widen_if_narrow(
         emb.unionByName(copies), sf_dir, name="embeddings"
     )
-    return S.semantic_dedup(
-        staged, threshold=0.95, centroids=_ivf_index_for(spark, sf_dir)
-    ).orderBy("vec_id")
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
+    return S.semantic_dedup(staged, threshold=0.95, centroids=cents).orderBy(
+        "vec_id"
+    )
 
 
 def embedding_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -982,7 +989,7 @@ def embedding_knn_join_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALE.md's routed 10×/10× row: 8.1 s vs 19.2 s brute, recall@5
     1.000 at nprobe=2).
     """
-    cents = _ivf_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     return S.knn_join(
@@ -3176,30 +3183,27 @@ LLM_ORACLES["dedup_span_removal_docs"] = f"""
 LLM_QUERIES["dedup_span_removal_docs"] = dedup_span_removal_docs
 
 
-_SPAN_STORE_CACHE: dict[str, tuple[str, int]] = {}
-
-
-def _span_store_for(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+def _span_index_stage(spark: SparkSession, sf_dir: str):
     """(artifact path, doc_id split threshold) of the persisted
     span-gram index over the FIRST-HALF staging (doc_id ≤ max/2) —
-    registered once per corpus fingerprint (content-addressed dir,
-    the _corpus_tag convention), loaded thereafter. The tokenize+gram
-    pass over history thus runs at ingest, never per query."""
-    key = os.path.abspath(sf_dir)
-    if key not in _SPAN_STORE_CACHE:
-        from tinyerp_etl_spark.operators import span_index as SI
+    registered once per corpus fingerprint, loaded thereafter. The
+    tokenize+gram pass over history thus runs at ingest, never per
+    query."""
+    from tinyerp_etl_spark.operators import span_index as SI
 
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        thr = int(docs.agg(F.max("doc_id")).first()[0]) // 2
-        first = docs.filter(F.col("doc_id") <= thr)
-        fp = corpus_fingerprint_docs(first)
-        path = os.path.join(
-            _artifact_root(), "span_index", _corpus_tag(sf_dir, fp)
-        )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    thr = int(docs.agg(F.max("doc_id")).first()[0]) // 2
+    first = docs.filter(F.col("doc_id") <= thr)
+
+    def build(path: str) -> tuple[str, int]:
         if SI.span_gram_store(spark, path).current_version() is None:
             SI.update_span_index(spark, path, first)
-        _SPAN_STORE_CACHE[key] = (path, thr)
-    return _SPAN_STORE_CACHE[key]
+        return path, thr
+
+    return corpus_fingerprint_docs(first), build
+
+
+_ARTIFACT_KINDS["span_index"] = _span_index_stage
 
 
 def incremental_span_removal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3220,7 +3224,7 @@ def incremental_span_removal_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     64-bit collisions (~2^32 distinct grams before one is likely)."""
     from tinyerp_etl_spark.operators import span_index as SI
 
-    path, thr = _span_store_for(spark, sf_dir)
+    path, thr = _persisted_artifact("span_index", spark, sf_dir)
     batch = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -3244,31 +3248,28 @@ LLM_QUERIES["incremental_span_removal_docs"] = incremental_span_removal_docs
 
 # ---------------- round-9 addition: product-quantization (PQ) index
 
-_PQ_CACHE: dict[str, tuple[list, str, tuple[int, int]]] = {}
-
 #: testdata embedding dim (TESTDATA.md); the ENGINE derives it from
 #: the data, the oracle needs it literal for the subspace slices — a
 #: dim change hash-mismatches immediately, which is the alarm we want
 _PQ_EMB_DIM = 64
 
 
-def _pq_index_for(spark: SparkSession, sf_dir: str) -> list:
-    """The loaded-or-trained PQ codebook for a corpus dir — same
-    content-addressed artifact flow as _ivf_artifact_for (fingerprint
-    first, fingerprint-keyed directory, load_or_train)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _PQ_CACHE:
-        from tinyerp_etl_spark.operators.ivf_index import (
-            corpus_fingerprint,
-            embedding_content,
-        )
+def _pq_index_stage(spark: SparkSession, sf_dir: str):
+    """The loaded-or-trained PQ codebook for a corpus dir — the same
+    flow as the IVF index (fingerprint first, load_or_train)."""
+    from tinyerp_etl_spark.operators.ivf_index import (
+        corpus_fingerprint,
+        embedding_content,
+    )
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        fp = corpus_fingerprint(emb, content=embedding_content())
-        path = os.path.join(_artifact_root(), "pq_index", _corpus_tag(sf_dir, fp))
-        book = PQX.load_or_train_pq_index(spark, emb, path, fingerprint=fp)
-        _PQ_CACHE[key] = (book, path, fp)
-    return _PQ_CACHE[key][0]
+    emb = load_table(spark, sf_dir, "embeddings")
+    fp = corpus_fingerprint(emb, content=embedding_content())
+    return fp, lambda path: PQX.load_or_train_pq_index(
+        spark, emb, path, fingerprint=fp
+    )
+
+
+_ARTIFACT_KINDS["pq_index"] = _pq_index_stage
 
 
 def pq_codebook_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3280,7 +3281,7 @@ def pq_codebook_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-means SQL, so this row proves loaded ≡ trained for the
     artifact the ADC query scores through (the ivf_index_roundtrip
     discipline applied to the quantizer)."""
-    book = _pq_index_for(spark, sf_dir)
+    book = _persisted_artifact("pq_index", spark, sf_dir)
     rows = [
         (int(s), int(cid), int(d), int(t))
         for s, cid, ticks in book
@@ -3300,9 +3301,8 @@ def pq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking in SQL, so this row proves the compressed-domain scores
     end to end."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return PQX.pq_adc_topk(
-        emb, query_vec_id=0, k=10, codebook=_pq_index_for(spark, sf_dir)
-    )
+    book = _persisted_artifact("pq_index", spark, sf_dir)
+    return PQX.pq_adc_topk(emb, query_vec_id=0, k=10, codebook=book)
 
 
 def _pq_oracle_ctes() -> str:
@@ -3395,8 +3395,8 @@ def ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         query_vec_id=0,
         k=10,
-        centroids=_ivf_index_for(spark, sf_dir),
-        codebook=_pq_index_for(spark, sf_dir),
+        centroids=_persisted_artifact("ivf_index", spark, sf_dir)[0],
+        codebook=_persisted_artifact("pq_index", spark, sf_dir),
     )
 
 
@@ -3420,7 +3420,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations in SQL, so the trained merge table is hash-proven, not
     just plausible.
     """
-    merges = _bpe_merges_for(spark, sf_dir)
+    merges = _persisted_artifact("bpe_merges", spark, sf_dir)
     return local_df(
         spark,
         merges,
@@ -3429,32 +3429,31 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("merge_idx")
 
 
-#: process cache of trained merges per corpus dir — the gate driver
-#: runs bpe_train_merges AND bpe_segment_stats in one process; train
-#: the shared rules once (same pattern as _IVF_CACHE)
-_BPE_CACHE: dict[str, list[tuple[int, str, str, str, int]]] = {}
+def _bpe_merges_stage(spark: SparkSession, sf_dir: str):
+    """Trained BPE merges for a corpus dir — cached only, never
+    persisted: bpe_train_merges AND bpe_segment_stats share the rules
+    in one process."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        X.tokens("text").alias("toks")
+    )
+    words = (
+        docs.select(F.explode("toks").alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
 
-
-def _bpe_merges_for(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, str, str, str, int]]:
-    key = os.path.abspath(sf_dir)
-    if key not in _BPE_CACHE:
-        docs = load_table(spark, sf_dir, "documents").select(
-            X.tokens("text").alias("toks")
-        )
-        words = (
-            docs.select(F.explode("toks").alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("freq"))
-        )
+    def build(_path: None) -> list[tuple[int, str, str, str, int]]:
         top = (
             words.orderBy(F.col("freq").desc(), "word")
             .limit(X.BPE_VOCAB_CAP)
             .collect()
         )
-        _BPE_CACHE[key] = X.bpe_train([(r["word"], r["freq"]) for r in top])
-    return _BPE_CACHE[key]
+        return X.bpe_train([(r["word"], r["freq"]) for r in top])
+
+    return None, build
+
+
+_ARTIFACT_KINDS["bpe_merges"] = _bpe_merges_stage
 
 
 def _bpe_cte_chain(n_merges: int, vocab_cap: int) -> list[str]:
@@ -3536,7 +3535,7 @@ def bpe_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import re as _re
 
-    merges = _bpe_merges_for(spark, sf_dir)
+    merges = _persisted_artifact("bpe_merges", spark, sf_dir)
     seg = "concat(' ', trim(regexp_replace(t, '(.)', '$1 ')), ' ')"
     for _, left, right, _, _ in merges:
         for s in (left, right):
@@ -3829,7 +3828,7 @@ def ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus scan (audit-scale by design); the pruned side is the
     production path through the persisted index.
     """
-    cents = _ivf_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", S._q(F.col("embedding")).alias("__vt")
@@ -3996,7 +3995,7 @@ def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     isolates what the M×KS quantization grid (not scoring noise)
     lost — the number that sizes KS at 100 TB. Shares the family's
     single top-k rule and report shape."""
-    book = _pq_index_for(spark, sf_dir)
+    book = _persisted_artifact("pq_index", spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", S._q(F.col("embedding")).alias("__vt")
@@ -4186,7 +4185,7 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-decreasing in nprobe — pinned by test — and the top level
     (nprobe = k lists) must equal the exhaustive ranking exactly.
     """
-    cents = _ivf_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
         "vec_id", S._q(F.col("embedding")).alias("__vt")
@@ -4423,31 +4422,26 @@ LLM_QUERIES["neardup_threshold_curve"] = neardup_threshold_curve
 # persisted MinHash feature index: featurize-at-ingest near-dup
 # (operators/minhash_index.py)
 
-_MINHASH_STORE_CACHE: dict[str, str] = {}
-
-
-def _minhash_store_for(spark: SparkSession, sf_dir: str) -> str:
+def _minhash_index_stage(spark: SparkSession, sf_dir: str):
     """Artifact path of the persisted MinHash feature index over the
     STORE staging (the even docs) — featurized once per corpus
-    fingerprint (content-addressed dir, the _corpus_tag convention),
-    loaded thereafter. The shingle/signature pass thus runs at
-    ingest, never per query — the _ivf_index_for / _bm25_index_for
-    flow applied to the near-dup family."""
-    key = os.path.abspath(sf_dir)
-    if key not in _MINHASH_STORE_CACHE:
-        from tinyerp_etl_spark.operators import minhash_index as MH
+    fingerprint, loaded thereafter. The shingle/signature pass thus
+    runs at ingest, never per query."""
+    from tinyerp_etl_spark.operators import minhash_index as MH
 
-        store_docs = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 2 == 0
-        ).select("doc_id", "text")
-        fp = corpus_fingerprint_docs(store_docs)
-        path = os.path.join(
-            _artifact_root(), "minhash_index", _corpus_tag(sf_dir, fp)
-        )
+    store_docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 2 == 0
+    ).select("doc_id", "text")
+
+    def build(path: str) -> str:
         if MH.minhash_feature_store(spark, path).current_version() is None:
             MH.save_minhash_index(spark, path, store_docs)
-        _MINHASH_STORE_CACHE[key] = path
-    return _MINHASH_STORE_CACHE[key]
+        return path
+
+    return corpus_fingerprint_docs(store_docs), build
+
+
+_ARTIFACT_KINDS["minhash_index"] = _minhash_index_stage
 
 
 def minhash_store_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4474,7 +4468,7 @@ def minhash_store_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("zzz qqq "), F.col("text")).alias("text"),
         )
     )
-    path = _minhash_store_for(spark, sf_dir)
+    path = _persisted_artifact("minhash_index", spark, sf_dir)
     return MH.neardup_against_store(spark, path, batch, threshold=0.5).orderBy(
         "store_doc", "batch_doc"
     )
@@ -4545,17 +4539,14 @@ LLM_ORACLES["minhash_store_neardup"] = f"""
 LLM_QUERIES["minhash_store_neardup"] = minhash_store_neardup
 
 
-_IVF_CORPUS_CACHE: dict[str, str] = {}
-
-
-def _ivf_store_corpus_for(spark: SparkSession, sf_dir: str):
+def _ivfpq_corpus_stage(spark: SparkSession, sf_dir: str):
     """TableStore of the persisted IVF-ASSIGNED store corpus (the even
     vectors), hive-partitioned by list_id — the assignment-at-ingest
     layout MATERIALIZED once, so store-probing queries read
     directory-pruned partitions instead of re-assigning the corpus per
     run (the run_stream_to_ivf_corpus layout, batch-built).
 
-    Keyed by the FULL-table fingerprint _ivf_artifact_for already
+    Keyed by the FULL-table fingerprint the IVF index already
     computed (not an even-subset one): the stored assignments are a
     function of the even vectors AND the centroids, and the centroids
     are a function of the full table — an even-only key would let an
@@ -4565,16 +4556,16 @@ def _ivf_store_corpus_for(spark: SparkSession, sf_dir: str):
     reusing the cached fingerprint spares a second aggregate scan.
     Returning the store (not a bare path) keeps the schema and
     partition layout declared exactly once."""
+    import hashlib
+
     from pyspark.sql.types import StructType
 
     from tinyerp_etl_spark.etl.table_store import TableStore
 
-    key = os.path.abspath(sf_dir)
-    if key not in _IVF_CORPUS_CACHE:
-        import hashlib
+    cents, _, fp = _persisted_artifact("ivf_index", spark, sf_dir)
+    book = _persisted_artifact("pq_index", spark, sf_dir)
 
-        cents, _, fp = _ivf_artifact_for(spark, sf_dir)
-        book = _pq_index_for(spark, sf_dir)
+    def build(path: str) -> TableStore:
         # "ivfpq_corpus": since round 10 the layout also carries the
         # PQ prescreen columns (codes + residual bound) written at
         # ingest — a new artifact family so old-schema "ivf_corpus"
@@ -4595,39 +4586,37 @@ def _ivf_store_corpus_for(spark: SparkSession, sf_dir: str):
         ident = hashlib.sha256(
             repr((cents, book, "prescreen-v2")).encode()
         ).hexdigest()[:8]
-        _IVF_CORPUS_CACHE[key] = os.path.join(
-            _artifact_root(),
-            "ivfpq_corpus",
-            f"{_corpus_tag(sf_dir, fp)}-{ident}",
-        )
-    store = TableStore(
-        spark,
-        _IVF_CORPUS_CACHE[key],
-        StructType.fromDDL(
-            "vec_id long, embedding array<float>, list_id int, "
-            "pq_codes array<int>, pq_eps double, pq_book string"
-        ),
-        partition_by=["list_id"],
-    )
-    if store.current_version() is None:
-        cents = _ivf_index_for(spark, sf_dir)
-        book = _pq_index_for(spark, sf_dir)
-        emb = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % 2 == 0)
-            .select("vec_id", "embedding")
-        )
-        # cluster by the partition column before the hive-partitioned
-        # write (guide §6, the ivf_partitioned_scan note): ~one file
-        # per list directory instead of tasks × lists files
-        store.commit(
-            PQX.pq_prescreen_cols(
-                S.ivf_assign_narrow(emb, centroids=cents), book
+        store = TableStore(
+            spark,
+            f"{path}-{ident}",
+            StructType.fromDDL(
+                "vec_id long, embedding array<float>, list_id int, "
+                "pq_codes array<int>, pq_eps double, pq_book string"
             ),
-            n_files=len(cents),
-            cluster_by=["list_id"],
+            partition_by=["list_id"],
         )
-    return store
+        if store.current_version() is None:
+            emb = (
+                load_table(spark, sf_dir, "embeddings")
+                .filter(F.col("vec_id") % 2 == 0)
+                .select("vec_id", "embedding")
+            )
+            # cluster by the partition column before the hive-partitioned
+            # write (guide §6, the ivf_partitioned_scan note): ~one file
+            # per list directory instead of tasks × lists files
+            store.commit(
+                PQX.pq_prescreen_cols(
+                    S.ivf_assign_narrow(emb, centroids=cents), book
+                ),
+                n_files=len(cents),
+                cluster_by=["list_id"],
+            )
+        return store
+
+    return fp, build
+
+
+_ARTIFACT_KINDS["ivfpq_corpus"] = _ivfpq_corpus_stage
 
 
 def embedding_neardup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4636,7 +4625,7 @@ def embedding_neardup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.embedding_neardup_against_store) — the
     modality twin of minhash_store_neardup. Store: the even vectors,
     assigned with the PERSISTED index and MATERIALIZED as a
-    list_id-hive-partitioned TableStore artifact (_ivf_store_corpus_for
+    list_id-hive-partitioned TableStore artifact ("ivfpq_corpus"
     — assignment never runs in the query path); the candidate join's
     list_id equality against the broadcast batch probes reaches that
     layout as partition pruning. Batch: the odd vectors ∪ exact copies
@@ -4651,10 +4640,10 @@ def embedding_neardup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-read ≡ recompute, hash-proven (the prescreen is provably
     pair-preserving, so the oracle needs no ADC model).
     """
-    cents = _ivf_index_for(spark, sf_dir)
-    book = _pq_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
+    book = _persisted_artifact("pq_index", spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    store_assigned = _ivf_store_corpus_for(spark, sf_dir).read()
+    store_assigned = _persisted_artifact("ivfpq_corpus", spark, sf_dir).read()
     batch = emb.filter(F.col("vec_id") % 2 == 1).unionByName(
         emb.filter(F.col("vec_id") % 10 == 0).select(
             (F.col("vec_id") + 500000).alias("vec_id"), "embedding"
@@ -4956,7 +4945,7 @@ def gram_novelty_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-tokenizes."""
     from tinyerp_etl_spark.operators import span_index as SI
 
-    path, thr = _span_store_for(spark, sf_dir)
+    path, thr = _persisted_artifact("span_index", spark, sf_dir)
     batch = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
@@ -5336,7 +5325,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     CAP yields a subset spread across the space (the
     cluster-then-bound step SemDeDup-style curation applies before
     training). Assignment is `ivf_assign_narrow` over the PERSISTED
-    ingest-time index (_ivf_index_for — a pure projection, zero
+    ingest-time index ("ivf_index" — a pure projection, zero
     shuffles); the cap is the salted two-phase top-N (cap_per_key,
     exact by construction), so at 100 TB the plan is one corpus scan
     + one bounded keyed shuffle, and a mega-cluster sorts in
@@ -5346,7 +5335,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from tinyerp_etl_spark.operators.sampling import cap_per_key
 
-    cents = _ivf_index_for(spark, sf_dir)
+    cents = _persisted_artifact("ivf_index", spark, sf_dir)[0]
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -5389,8 +5378,6 @@ LLM_QUERIES["cluster_balanced_sample"] = cluster_balanced_sample
 
 
 # ---------- round-11 addition: incremental DSIR via the model store
-_DSIR_STORE_CACHE: dict[str, str] = {}
-
 
 def _dsir_two_fold_init(
     spark: SparkSession, path: str, raw: DataFrame, id_col: str = "doc_id"
@@ -5448,27 +5435,27 @@ def _dsir_two_fold_init(
         _resume()
 
 
-def _dsir_store_for(spark: SparkSession, sf_dir: str) -> str:
+def _dsir_model_stage(spark: SparkSession, sf_dir: str):
     """Artifact path of the persisted DSIR raw model for a corpus —
     the RAW pool (everything but the en/src13 target) folded in TWO
     ingest-ordered batches split at the median doc_id, registered
-    once per corpus fingerprint (the _corpus_tag convention), loaded
-    thereafter. History featurizes at ingest, never per query."""
-    key = os.path.abspath(sf_dir)
-    if key not in _DSIR_STORE_CACHE:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source"
-        )
-        raw = docs.filter(
-            ~((F.col("lang") == "en") & (F.col("source") == "src13"))
-        ).select("doc_id", "text")
-        fp = corpus_fingerprint_docs(raw)
-        path = os.path.join(
-            _artifact_root(), "dsir_model", _corpus_tag(sf_dir, fp)
-        )
+    once per corpus fingerprint, loaded thereafter. History
+    featurizes at ingest, never per query."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source"
+    )
+    raw = docs.filter(
+        ~((F.col("lang") == "en") & (F.col("source") == "src13"))
+    ).select("doc_id", "text")
+
+    def build(path: str) -> str:
         _dsir_two_fold_init(spark, path, raw)
-        _DSIR_STORE_CACHE[key] = path
-    return _DSIR_STORE_CACHE[key]
+        return path
+
+    return corpus_fingerprint_docs(raw), build
+
+
+_ARTIFACT_KINDS["dsir_model"] = _dsir_model_stage
 
 
 def incremental_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5486,7 +5473,7 @@ def incremental_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tinyerp_etl_spark.operators import dsir_index as DI
     from tinyerp_etl_spark.operators.sampling import dsir_select
 
-    path = _dsir_store_for(spark, sf_dir)
+    path = _persisted_artifact("dsir_model", spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
@@ -6094,31 +6081,23 @@ LLM_QUERIES["web_curation_pipeline_manifest"] = web_curation_pipeline_manifest
 # ---- round-12 addition: the manifest scored against the PERSISTED
 # DSIR store (the production composition — history featurizes at
 # ingest, selection scores batches against folded history)
-_WEB_DSIR_STORE_CACHE: dict[str, str] = {}
-
-
-def _web_dsir_store_for(
-    spark: SparkSession, sf_dir: str, surv: DataFrame
-) -> str:
+def _dsir_model_web_stage(spark: SparkSession, sf_dir: str, surv: DataFrame):
     """Artifact path of the persisted DSIR raw model over the web
     manifest's quality-survivor pool, keyed by the survivors' content
     fingerprint — any change to the extract/dedup/quality chain
     changes the fingerprint and retires the store rather than
     silently serving stale counts. Two-fold initialised through the
     shared bootstrap like every sibling store."""
-    key = os.path.abspath(sf_dir)
-    if key not in _WEB_DSIR_STORE_CACHE:
-        from tinyerp_etl_spark.operators.ivf_index import (
-            corpus_fingerprint,
-        )
+    from tinyerp_etl_spark.operators.ivf_index import corpus_fingerprint
 
-        fp = corpus_fingerprint(surv, "crawl_id", "text")
-        path = os.path.join(
-            _artifact_root(), "dsir_model_web", _corpus_tag(sf_dir, fp)
-        )
+    def build(path: str) -> str:
         _dsir_two_fold_init(spark, path, surv, id_col="crawl_id")
-        _WEB_DSIR_STORE_CACHE[key] = path
-    return _WEB_DSIR_STORE_CACHE[key]
+        return path
+
+    return corpus_fingerprint(surv, "crawl_id", "text"), build
+
+
+_ARTIFACT_KINDS["dsir_model_web"] = _dsir_model_web_stage
 
 
 def web_manifest_store_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6143,7 +6122,7 @@ def web_manifest_store_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ann2, surv, tgt = _web_manifest_annotated(spark, sf_dir)
     surv = materialize(surv)
-    path = _web_dsir_store_for(spark, sf_dir, surv)
+    path = _persisted_artifact("dsir_model_web", spark, sf_dir, surv)
     scores = DI.dsir_scores_against_store(
         spark, path, surv, tgt, id_col="crawl_id"
     )

@@ -1,95 +1,10 @@
-"""Assembles the full queries()/oracle_sql() surface for the driver.
+"""Query registry: every plan module's (QUERIES, ORACLES), merged by name.
 
 Each plans submodule contributes (QUERIES, ORACLES); names are globally
 unique. Queries without an oracle entry (non-SQL-expressible ops) get a
-rows-only check from the driver.
-
-Ordering note: the driver's correctness gate covers the first 50
-registry entries, so insertion order is the rotation schedule.
-ACTIVE: _ROUND14_FRONT_50 (see its inline comments — after round 14's
-gate runs green, EVERY registered query's newest driver row is r11+
-except the eight documented r10 deferrals (five from the pre-staged
-resolution plus one per in-round newcomer), the six oldest rows in
-the registry get refreshed from r9, and the four rows whose engines
-round 14 touched are re-proven). Prior gates below for the ledger; note
-round 8 ran _ROUND7_FRONT_50 unchanged, so the r7 list's rows carry
-r8-fresh evidence.
-Round 5's front 50 (ran in rounds 5 AND 6; see _ROUND5_FRONT_50's
-inline comments for the per-group rationale) =
-  (0) the five queries NEW in round 5 (video_neardup_parity,
-      perceptual_checker_parity, mp4_container_parity,
-      semantic_dedup_embeddings, bm25i_retrieval_docs),
-  (a) the 21 rows round 4 displaced — VERDICT r4 named them round
-      5's backbone,
-  (b) the four queries over engine code changed this round
-      (sign-bucket cap, codec guards, TableStore commit path),
-  (c) 20 of the 27 remaining round-2-stale rows, oldest evidence
-      first; deferred to round 6: embedding_topk_bruteforce/ivf/lsh
-      and embedding_quantize_int8 (their shared quantized-scoring
-      kernel is represented by embedding_neardup_pairs +
-      embedding_knn_join + the new semantic_dedup_embeddings in this
-      gate), pandas_udf_mask_names (shape represented by
-      pii_redact_docs in this gate), exact_dup_groups (its
-      fingerprint kernel twin dedup_exact_count is r4-green), and
-      token_count_by_source (its tokenizer kernel is exercised by
-      the new bm25i_retrieval_docs plus text_profile_docs /
-      tfidf_top_terms in this gate).
-Cumulative ledger: after round 5 lands, every query's newest green
-row is r3+ except the SEVEN deferrals (r2: the embedding_topk trio,
-embedding_quantize_int8, pandas_udf_mask_names, exact_dup_groups,
-token_count_by_source) and the round-5 additions beyond the five
-gated ones (copurchase_triangles and attribution_interval_join —
-pytest-parity green this round, front-50 candidates for round 6).
-Round 4's front 50 =
-  (0) the twenty-one queries NEW in round 4 (sequence packing, domain
-      mixture resample, approx-quantile contract, key-skew profile,
-      XML round-trip, incremental batch-vs-store dedup, training
-      shard manifest, end-to-end curation pipeline, unigram
-      surprisal filter, the four TPC-H completions Q2/Q14/Q17/Q22,
-      the mergeable-sketch rollups kmv_sketch_rollup /
-      hll_union_rollup, the single-scan column profiler
-      data_profile_orders, the fused-SQL ML inference scorer
-      sql_ml_inference_score, the z-order clustered round-trip
-      zorder_clustered_scan, the bucketed fact-fact join round-trip
-      bucketed_join_revenue, and the perceptual-hash codec checks
-      image_dhash_parity / audio_fingerprint_parity) — zero driver
-      evidence outranks stale-but-proven rows,
-  (a) every query whose engine code changed this round: the HLL
-      within-bound contract (the r03 `no_oracle` slot, now
-      hash-checkable), the two `_year_stitched` rewrites, the OLS
-      pre-grouping null filter, the LSH bucket-cap path (candidate
-      pairs, components, canonical-keep, signatures), the
-      connected-components/closure lineage checkpoints, the knn_join
-      batch guard, the multimodal decode/extract hardening, and the
-      fused decontamination kernel,
-  (b) queries whose newest green row dates to round 1 (the
-      relational join/TPC-H families) — oldest evidence first,
-      exactly the freshness debt VERDICT r3 flagged. To make room
-      for (0), twenty-one low-churn rows wait for round 5: the six
-      static showcases (scalar/array/null/coercion/datetime/
-      window-nav), setops_bag_semantics and unpivot_nation_balances
-      (their twins setops_customer_nations / pivot_status_by_priority
-      stay in), pii_redact_docs (r2), groupwise_min_cheapest_parts,
-      quantiles_order_value_by_status, the two sampling queries
-      (deterministic/stratified — both r1-proven, pure and
-      input-stable), conditional_agg_returnflag /
-      subquery_small_quantity_revenue (their plan shapes are
-      represented by the fresher q14/q17 rows in this gate),
-      audit_counts (displaced by its own per-column generalization,
-      data_profile_orders), window_rank_price_in_status (rank-window
-      shape represented by window_latest_order_per_customer and q2's
-      partitioned window), and q10_returned_items (join+group+top-k
-      shape represented by the fresher q3/q18 rows in this gate),
-      exists_returned_orders (its EXISTS shape represented by the
-      fresher q4 semi-join row), join_semi_customers_with_orders
-      (semi shape also in the gate via q4/q20), and agg_rollup (its
-      shape is a special case of agg_cube, which stays in).
-Cumulative ledger: all 121 pre-round-4 queries have at least one
-green row across rounds 1-3; the 21 round-4 additions (9 training-
-pipeline ops + TPC-H completions Q2/Q14/Q17/Q22 + the two sketch
-rollups + the column profiler + the fused-SQL ML scorer + the
-z-order and bucketed-join round-trips + the image/audio codec
-checks) get theirs this round.
+rows-only check. The correctness gate covers the first 50 entries of
+``all_queries()``, so ``_FRONT_50`` fixes that order;
+``tests/test_oracle_parity.py`` pins it. Gate-rotation history lives in git.
 """
 
 from __future__ import annotations
@@ -202,676 +117,22 @@ _RELATIONAL_NAMES = [
     "approx_quantile_order_totals",
 ]
 
-# Round 9 gate: the 50 queries that most need a fresh driver row.
-# Ledger correction first: round 8 ran _ROUND7_FRONT_50 UNCHANGED (no
-# _ROUND8_FRONT_50 ever existed), so every "after round 7" claim below
-# also holds verbatim after round 8, and the r7 list's rows are
-# r8-fresh. Evidence ages going into round 9, computed from the four
-# ledger lists (r3/r4/r5+6/r7+8): 50 rows r8-fresh, 49 rows r6, 48
-# rows r4, 18 rows r3 (the documented deferral list, now FIVE rounds
-# stale), 2 rows never gated.
-# Composition of this list:
-#   (0) the TWO queries with zero driver evidence, registered outside
-#       the front-50 since round 7: ivf_nprobe_recall_curve,
-#       neardup_threshold_curve (both scalar-only — safe under the r8
-#       assert_driver_hashable contract),
-#   (a) ALL EIGHTEEN r3-stale deferrals (registry ledger above;
-#       VERDICT r9 ask #1) — q1_pricing_summary,
-#       q3_shipping_priority, q5_local_supplier_volume,
-#       q7_volume_shipping, q8_market_share, sql_q6_forecast_revenue,
-#       promo_revenue_ratio, monthly_revenue_trend,
-#       gapfill_daily_revenue, window_running_total,
-#       set_null_missing_region, embedding_label_centroids,
-#       heavy_hitter_tokens, boilerplate_ngram_stats,
-#       collocations_top_pmi, copurchase_pagerank_3iter,
-#       train_val_test_split_docs, c4_quality_filter_stats,
-#   (0b) ngram_decontaminate_docs, NEW in round 9 (13-gram eval-set
-#       decontamination as a hash-bucketed join) — enters at birth
-#       per the r4 principle, displacing q14_promo_revenue (r4-green
-#       on untouched code; its promo-ratio shape is covered by the
-#       in-gate promo_revenue_ratio row),
-#   (0c) dup_span_coverage_docs, also NEW in round 9 (span-level
-#       exact-substring duplicate coverage, the Lee-et-al ExactSubstr
-#       signal) — enters at birth, displacing hll_distinct_users
-#       (r4-green on untouched code; the HLL engine path stays gated
-#       through the in-gate hll_union_rollup row),
-#   (0d) pq_codebook_embeddings + pq_topk_embeddings +
-#       pq_recall_report + ivfpq_topk_embeddings, also NEW in round 9
-#       (persisted product-quantization codebook: training parity +
-#       ADC compressed-domain top-k + the family recall audit + the
-#       IVF-PQ two-artifact composition) — enter at birth, displacing
-#       dedup_exact_count (its exact-dedup shape is r8-green via
-#       exact_dup_groups), multimodal_frame_sample (its
-#       keyframe-sampling shape is r8-green via mp4_keyframe_parity),
-#       kmv_sketch_rollup (KMV is r8-green via kmv_distinct_users and
-#       the mergeable-rollup shape stays gated via the in-gate
-#       hll_union_rollup), and minhash_signatures (its signature
-#       kernel is computed inside the in-gate
-#       minhash_lsh_neardup_pairs), all four r4-green on untouched
-#       code,
-#   (b) 24 of the 48 r4-stale rows, prioritizing the LLM-pipeline /
-#       persisted-artifact / round-trip operators whose shapes no
-#       fresher gate row covers (dedup+LSH family, curation manifests,
-#       multimodal, sketch rollups, z-order/bucketed/XML round-trips,
-#       skew profile, OLS, ML scorer, TPC-H completions Q2/Q17/Q22,
-#       hierarchy closure).
-# Deferred to round 10 (the ONLY rows whose newest green will then
-# predate r6 — all r4-green on code untouched since, every shape
-# represented by a fresher or in-gate row): agg_cube,
-# agg_distinct_count, anomaly_zscore_daily_revenue,
-# data_profile_orders, hierarchy_subtree_rollup,
-# join_anti_orphan_audit, join_full_outer_balance, join_left_enrich,
-# pivot_status_by_priority, q13_order_distribution, q15_top_supplier,
-# q18_large_volume_customers, q19_discount_revenue,
-# scalar_subquery_rich_idle_customers, setops_customer_nations,
-# topk_expensive_orders, window_latest_order_per_customer,
-# window_moving_avg_daily_revenue, plus q14_promo_revenue,
-# hll_distinct_users, dedup_exact_count, multimodal_frame_sample,
-# kmv_sketch_rollup, minhash_signatures, and (displaced mid-round by
-# the round-9 newcomers, see (0e)/(0f) below) decontaminate_docs and
-# embedding_knn_join (each displaced by a
-# round-9 newcomer whose ledger entry above names the fresher row
-# covering its shape).
-# After round 9's gate runs green, every query's newest driver row is
-# r4+ with zero never-gated rows — the r3 rotation debt retires
-# completely for the first time.
-#
-# Round 10 gate (ACTIVE). Composed from the pre-staged plan below
-# (r9 gate confirmed 50/50 green — CORRECTNESS_r09.json):
-#   (0) the six rows whose ENGINE CODE this round changes — the
-#       auto-routed embedding_knn_join (large query batches now route
-#       through the persisted-IVF broadcast-probe kernel instead of
-#       the brute cross join; VERDICT r9 next #2), the PQ-ADC
-#       compressed-domain prescreen inside embedding_neardup_store's
-#       verify (VERDICT r9 next #3), and the four persisted-index
-#       folds rebased onto the shared fold harness (minhash_store_
-#       neardup, bm25i_incremental_index, paragraph_dedup_docs,
-#       bloom_decontaminate_docs; VERDICT r9 next #5) — changed
-#       engine outranks fresh evidence, the r7 semantic_dedup
-#       precedent. embedding_knn_join doubles as deferral (a)(b1).
-#   (a) ALL 25 remaining r4-stale deferrals named in the round-9
-#       ledger above (decontaminate_docs through
-#       window_moving_avg_daily_revenue) — retiring the r4 debt the
-#       way r9 retired r3's. After this gate runs green, no
-#       registered query's newest driver row predates r6.
-#   (b) fill to 50 with r6-stale rows (newest green r6: the round-5
-#       list ran in rounds 5 AND 6, untouched since) — 19 at rotation
-#       time, 16 after the three mid-round newcomers displaced
-#       snapshot_diff_orders (embedding_knn_join_routed),
-#       tfidf_top_terms (dedup_span_removal_docs), and
-#       embedding_neardup_pairs (incremental_span_removal_docs),
-#       prioritizing LLM-pipeline / multimodal / persisted-artifact /
-#       round-trip shapes no fresher row covers (fingerprint family
-#       simhash/winnow, embedding pairs, the five perceptual/codec
-#       parities, BM25 retrieval, text-analysis family, PII, the
-#       Arrow-UDAF and UDTF surfaces, the two TableStore round-trips).
-# Deferred to round 11 (30 rows, ALL r6-green on untouched code —
-# after round 10 these are the only rows whose newest green predates
-# r7; every shape is covered by a fresher or in-gate row): the six
-# static showcases (scalar/array/null/coercion/datetime/window-nav),
-# setops_bag_semantics, unpivot_nation_balances,
-# groupwise_min_cheapest_parts, quantiles_order_value_by_status,
-# deterministic_sample_orders, stratified_sample_orders,
-# conditional_agg_returnflag, subquery_small_quantity_revenue,
-# audit_counts, window_rank_price_in_status, q10_returned_items,
-# exists_returned_orders, join_semi_customers_with_orders,
-# agg_rollup, grouping_sets_revenue, incremental_rollup_orders,
-# replace_order_items, q4_priority_late_ship, q9_product_type_profit,
-# q11_important_parts, q12_priority_by_linestatus,
-# q16_supplier_diversity, q20_heavy_part_suppliers,
-# q21_sole_late_shippers, snapshot_diff_orders (displaced mid-round
-# by the embedding_knn_join_routed newcomer; its versioned-read
-# round-trip shape stays gated via time_travel_orders_versions), and
-# tfidf_top_terms (displaced mid-round by the dedup_span_removal_docs
-# newcomer; its df/idf ranking kernel stays gated via
-# bm25i_retrieval_docs), and embedding_neardup_pairs (displaced
-# mid-round by the incremental_span_removal_docs newcomer; its shape
-# stays gated via embedding_neardup_store)
-# — the stable relational/TPC-H backbone and
-# showcases (their scan/agg/join kernels are exercised by dozens of
-# in-gate rows). Guard-only edits this round (fail-fast isinstance
-# checks in similarity.ivf_assign_expr/ivf_probe_expr, the
-# pq_adc_topk codebook=None refusal, connected_components
-# try/finally unpersist) do not alter any gated path's semantics and
-# do not consume slots; the affected rows' newest greens are r9.
-# Round 11 gate (ACTIVE). Composed from the pre-staged plan in the
-# round-10 ledger (r10 gate confirmed 50/50 green —
-# CORRECTNESS_r10.json; the r10 verdict's independent replay confirmed
-# the remaining evidence-debt set is EXACTLY the 33 rows below):
-#   (0) the four round-11 newcomers, gated at birth per convention:
-#       decontaminate_span_removal_docs (operators/dedup.remove_
-#       contaminated_spans — SURGICAL eval-set decontamination: cut
-#       the leaked span, keep the doc; the flag-only forms
-#       decontaminate_docs/ngram_decontaminate_docs stay gated via
-#       their r10/r9 rows), per_source_cap_sample (operators/
-#       sampling.cap_per_key — the absolute per-domain ceiling a
-#       rate-based sampler cannot express), quality_percentile_by_
-#       source (per-domain calibrated quality ranking, integer ppm end
-#       to end), and embedding_knn_join_inline (the routed kernel's
-#       inline-train + memoized-centroids path at full probe depth,
-#       where the brute oracle proves it exact — the persisted-
-#       centroids path stays covered by embedding_knn_join_routed).
-#   (0b) the two rows whose ENGINE CODE this round changes — changed
-#       engine outranks fresh evidence (the r7 semantic_dedup
-#       precedent): incremental_span_removal_docs (the span-gram
-#       store now folds cluster_by=["gram_key"] and the CLEAN path
-#       enforces both law preconditions — already-folded and
-#       out-of-order batches refuse loudly; fold probe runs its
-#       anti-join once via the prematerialized seam) and
-#       embedding_neardup_store (pq_prescreen_cols stamps the
-#       codebook digest, the consumer validates it, and the
-#       ivfpq_corpus artifact re-keys for the new layout).
-#       Guard-only edits that do not consume slots (the standing
-#       convention): connected_components' superseded-pin release on
-#       the count-throw path, and the routed-knn centroid memo when
-#       centroids ARE passed (the gated routed row pins centroids
-#       explicitly; the memo path itself is gated by the NEW
-#       embedding_knn_join_inline above, not grandfathered).
-#   (a) ALL 33 remaining r6-stale rows named in the round-10 ledger
-#       (the 30 pre-staged deferrals + the 3 mid-round displacements
-#       snapshot_diff_orders / tfidf_top_terms /
-#       embedding_neardup_pairs) — retiring the r6 debt the way r10
-#       retired r4's and r9 retired r3's. After this gate runs green,
-#       NO registered query's newest driver row predates r7 and the
-#       deferral ledger is EMPTY for the first time.
-#   (b) fill to 50 with r8-stale rows (the oldest remaining evidence
-#       once the r6 set retires — the r7 list ran unchanged in round
-#       8), shape-starved first: semantic_dedup_embeddings (SemDeDup —
-#       no fresher row covers cluster-then-prune),
-#       watermark_resolution_matrix (the §17/§21-25 watermark
-#       machine), scd2_user_event_history (§14e), incremental_
-#       pipeline_events (§28-29 per-page commit orchestration),
-#       csv_quarantine_split (§6c bad-records path), ivf_recall_report
-#       (the recall-honesty contract every ANN claim leans on),
-#       range_join_event_bursts (non-equi interval join),
-#       skew_salted_event_totals (the skew-salting lever), and
-#       fuzzy_match_customers (edit-distance blocking). Eleven at
-#       rotation time; two displaced mid-round by the fifth and sixth
-#       newcomers (the standing displacement convention):
-#       mp4_keyframe_parity (its codec-parity family carries FIVE
-#       r10-green siblings — image_dhash/audio/video/perceptual/
-#       mp4_container — covering the shape) displaced by
-#       span_clean_and_fold_docs (operators/span_index.clean_and_fold_
-#       batch — the COMPOSED production ingest loop: pre-filter
-#       replays → clean → idempotent cleaned append → gram fold,
-#       oracled as three one-shot prefix-law blocks, so the
-#       sequential ≡ one-shot law is proven THROUGH the loop), and
-#       hybrid_rrf_retrieval (its retrieval kernels are covered by
-#       r10-green bm25i_retrieval_docs and the embedding-ranking rows;
-#       the fusion row itself stays registered and r8-green) displaced
-#       by gram_novelty_docs
-#       (span_index.gram_novelty_against_store — distinct-gram
-#       novelty vs history through the SAME persisted store the
-#       incremental row probes; the freshness/memorization-risk
-#       signal). A SEVENTH mid-round newcomer,
-#       dsir_importance_sample (operators/sampling.dsir_* — DSIR
-#       importance resampling, Xie et al. NeurIPS 2023: hashed
-#       unigram+bigram models in integer bits, per-doc target-vs-raw
-#       log-likelihood-ratio scores, whole-tie-group quantile
-#       selection with no global row sort), displaces
-#       ivf_recall_report: its recall-report kernel is carried by the
-#       r9-green ivf_nprobe_recall_curve (the same overlap-vs-exact
-#       measurement, swept over nprobe), and the in-gate
-#       embedding_knn_join_inline/_routed rows hash-prove the IVF
-#       read path at full probe depth; the row stays registered and
-#       r8-green. An EIGHTH mid-round newcomer,
-#       cluster_balanced_sample (plans/llm_ops — diversity-preserving
-#       embedding subsampling: ivf_assign_narrow over the persisted
-#       index, then the salted two-phase per-cluster cap; the oracle
-#       replicates train + assign + single-window cap), displaces
-#       skew_salted_event_totals: the skew-salting lever is
-#       hash-proven in-gate by TWO salted two-phase rows
-#       (per_source_cap_sample and cluster_balanced_sample run the
-#       salted kernel against single-window oracles), and the row
-#       stays registered and r8-green. A NINTH mid-round newcomer,
-#       incremental_dsir_sample (operators/dsir_index — the persisted
-#       DSIR raw-model store, the fold harness's SEVENTH instance:
-#       bucket counts are additive so folded ≡ one-shot refit
-#       EXACTLY, and the row shares the one-shot oracle, the
-#       bm25i_incremental_index convention; watermark replay filter,
-#       n_buckets refusal, and no-op edges pinned by
-#       tests/test_dsir_index.py), displaces
-#       semantic_dedup_embeddings: its cluster-then-prune kernel is
-#       carried in-gate by embedding_neardup_store (the same IVF
-#       assignment + within-list pair scoring, re-proven this round
-#       under the digest-validated prescreen) with
-#       cluster_balanced_sample covering the assignment face; the row
-#       stays registered and r8-green.
-# Deferred to round 12: NOTHING structurally — every registered
-# query's newest green is r7+ once this gate runs.
-#
-# PRE-STAGED ROUND-12 ROTATION PLAN (compose at round-12 start,
-# exactly as every rotation has):
-#   (0) any round-12 newcomers, gated at birth, displacing fills
-#       whose shapes fresher rows cover (document each). SEVEN are
-#       already named: ctfidf_source_terms (late-round-11 addition —
-#       class-based TF-IDF labeling), html_extract_docs
-#       (late-round-11 addition — HTML → text extraction with staged
-#       full pages, the web-corpus front door), and
-#       url_normalize_dedup (late-round-11 addition — canonical-URL
-#       dedup: the cheapest pre-content dedup pass), plus
-#       web_curation_pipeline_manifest (late-round-11 addition — the
-#       END-TO-END web manifest composing all three with the DSIR
-#       selector: extract → URL dedup → C4 quality → DSIR keep, all
-#       six dispositions non-vacuous), and dup_cluster_histogram
-#       (late-round-11 addition — exact-duplicate cluster-size
-#       distribution with corpus shares in exact ppm, the standard
-#       dedup report, staged at sizes 1/2/4), and lang_id_confusion
-#       (late-round-11 addition — the guesser-vs-label confusion
-#       matrix with within-label ppm shares, the audit run before
-#       trusting a language filter), and simhash_neardup_docs
-#       (late-round-11 addition — Manku/Jain/Sarma Hamming-ball
-#       near-dup pairs: 4×8-bit banding with GUARANTEED recall at
-#       radius ≤3, the deterministic-recall counterpart to MinHash
-#       banding; band-completeness law pinned exhaustively by test);
-#       all oracle-parity
-#       verified at sf0.001+sf0.01 at add time and swept by pytest,
-#       but the round-11 gate's remaining fills were all
-#       shape-starved, so their driver rows land here. Slot
-#       arithmetic: the (a) list below is 38 + 3 mid-round-11
-#       displacements = 41 rows, plus these 7 pre-staged newcomers =
-#       48 of 50 — 2 slots free for genuine round-12 newcomers and
-#       changed-engine rows (more newcomers displace covered fills,
-#       the standing convention);
-#   (0b) rows whose engine code round 12 changes — changed engine
-#       outranks fresh evidence. ONE is already owed from late round
-#       11: lang_id_docs (r10-green, but operators/text.lang_id was
-#       rewritten to bind the tokenizer once per row — results
-#       identical, parity re-proven at add time, yet the standing
-#       convention re-gates changed engine code);
-#   (a) ALL 38 rows whose newest green will then be r8 (the r7 list
-#       ran unchanged in round 8; after the r11 gate these are the
-#       oldest evidence): asof_purchase_to_view,
-#       attribution_interval_join, attribution_lambda_parity,
-#       bm25i_index_retrieval, bpe_segment_stats, bpe_train_merges,
-#       cohort_retention_daily, copurchase_part_pairs,
-#       copurchase_triangles, embedding_quantize_int8,
-#       embedding_topk_bruteforce, embedding_topk_ivf,
-#       embedding_topk_lsh, events_session_windows,
-#       events_sliding_windows, events_time_grain_rollup,
-#       events_tumbling_hourly, exact_dup_groups,
-#       file_format_roundtrip_orders, funnel_view_click_purchase,
-#       hybrid_rrf_retrieval, int8_rank_fidelity,
-#       ivf_assign_narrow_parity, ivf_index_roundtrip,
-#       ivf_partitioned_scan, json_props_rollup,
-#       keep_latest_event_per_user, kmeans_centroids_embeddings,
-#       kmv_distinct_users, longest_active_streaks, lsh_recall_report,
-#       merge_upsert_events, mp4_keyframe_parity,
-#       nested_flatten_roundtrip, pandas_udf_mask_names,
-#       sessionize_user_events, token_count_by_source,
-#       variant_props_extract — 38 rows, plus ivf_recall_report,
-#       skew_salted_event_totals, and semantic_dedup_embeddings
-#       (displaced mid-round-11 by dsir_importance_sample,
-#       cluster_balanced_sample, and incremental_dsir_sample, so
-#       their newest greens stay r8) = 41 rows, leaving 9 slots, so
-#       the r8 debt can retire in ONE gate exactly as r9/r10/r11
-#       retired r3/r4/r6;
-#   (b) fill remaining slots with r9-stale rows, shape-starved first.
-# ROUND-12 ROTATION — executes the pre-staged plan above verbatim.
-# Slot arithmetic: 7 pre-staged late-round-11 newcomers + 1 genuine
-# round-12 newcomer (web_manifest_store_scored, gated at birth) +
-# the owed changed-engine row (lang_id_docs) + ALL 41 r8-stale rows
-# (the 38 named + the 3 mid-round-11 displacements) = 50/50. After
-# this gate runs green, every registered query's newest driver row
-# is r9+ and ZERO registered queries lack driver evidence — the r8
-# debt retires in one gate exactly as r9/r10/r11 retired r3/r4/r6.
-# The 41-row r8-stale set was re-derived from the eleven CORRECTNESS
-# files at rotation time and equals the pre-staged list set-for-set.
-#
-# Changed-engine accounting for round 12 (changed engine outranks
-# fresh evidence; every changed kernel is driven IN-GATE):
-#   - operators/text.py normalize_url (userinfo drop) and html_links
-#     (single-quoted/unquoted hrefs): owned by url_normalize_dedup
-#     and html_extract_docs — both in-gate, both staging the new
-#     branches non-vacuously.
-#   - plans/llm_ops simhash staging offset (max(doc_id)+1): owned by
-#     simhash_neardup_docs — in-gate.
-#   - operators/text.py lang_id (tokenizer bound once per row, late
-#     round 11): lang_id_docs — in-gate, the owed (0b) row.
-#   - operators/dsir_index (build_dsir_model_rows pins its
-#     featurization; the overlap raise is now DsirOverlapError) and
-#     the shared two-fold bootstrap (_dsir_two_fold_init): driven
-#     in-gate by web_manifest_store_scored, which folds a store
-#     through update_dsir_model → build_dsir_model_rows via the SAME
-#     shared bootstrap and hash-proves the store read + scoring tail
-#     against the in-query oracle; incremental_dsir_sample (r11-
-#     green, identical code path) stays registered with the freshest
-#     possible prior evidence, and the exception-type contract is
-#     control-plane, pinned by test_dsir_index.py.
-#   - plans/llm_ops web manifest refactor (shared front half):
-#     web_curation_pipeline_manifest — in-gate.
-#
-# PRE-STAGED ROUND-13 ROTATION PLAN (compose at round-13 start):
-#   (0) any round-13 newcomers, gated at birth, displacing fills
-#       whose shapes fresher rows cover (document each). TWO are
-#       already named: gopher_quality_docs (late-round-12 addition —
-#       the Gopher rule family, Rae et al. 2021 A1.1: word-count/
-#       mean-word-length bounds, symbol density, bullet/ellipsis line
-#       structure, alpha-word share, required English words; every
-#       rule staged non-vacuous) and line_dedup_docs (late-round-12
-#       addition — CCNet-style cross-document boilerplate-line
-#       removal: lines in ≥2 distinct docs drop everywhere including
-#       the first occurrence, byte-exact reassembly hash-compared);
-#       both oracle-parity verified at sf0.001+sf0.01 at add time
-#       with 10× SCALE probes recorded, but the round-12 gate's 50
-#       slots were committed to retiring the r8 debt, so their
-#       driver rows land here;
-#   (0b) rows whose engine code round 13 changes. THREE are already
-#       owed from late round 12 (the tick-hoist optimization pass:
-#       similarity.semantic_dedup / neardup_pairs / knn_join-brute /
-#       brute_force_topk / lsh_topk now quantize each vector ONCE
-#       before their pair/scan fan-out instead of re-quantizing per
-#       pair — results bit-identical, 4.3× measured on semantic_dedup,
-#       parity re-proven at sf0.001 + sf0.01 at change time): most
-#       owner rows sit in the round-12 gate (semantic_dedup_embeddings,
-#       embedding_neardup_pairs, embedding_topk_bruteforce,
-#       embedding_topk_lsh) and two are in the (a) list below
-#       (neardup_threshold_curve, neardup_components), but
-#       embedding_knn_join (brute kernel, r10-green) plus
-#       embedding_knn_join_inline / embedding_knn_join_routed
-#       (r11-green; they route through the same scoring tail) could
-#       not fit round 12's committed 50 — gate them here;
-#   (a) the 48 rows whose newest green will then be r9 (re-derive
-#       from the CORRECTNESS files at rotation time; today's set):
-#       applyinpandas_group_ols, approx_quantile_order_totals,
-#       boilerplate_ngram_stats, bucketed_join_revenue,
-#       c4_quality_filter_stats, collocations_top_pmi,
-#       copurchase_pagerank_3iter, curation_pipeline_manifest,
-#       dedup_keep_canonical, domain_mixture_resample,
-#       dup_span_coverage_docs, embedding_label_centroids,
-#       gapfill_daily_revenue, heavy_hitter_tokens,
-#       hierarchy_closure_part, hll_union_rollup,
-#       incremental_dedup_new_docs, ivf_nprobe_recall_curve,
-#       ivfpq_topk_embeddings, key_skew_profile_events,
-#       minhash_lsh_neardup_pairs, monthly_revenue_trend,
-#       multimodal_manifest, neardup_components,
-#       neardup_threshold_curve, ngram_decontaminate_docs,
-#       pq_codebook_embeddings, pq_recall_report, pq_topk_embeddings,
-#       promo_revenue_ratio, q17_small_quantity_revenue,
-#       q1_pricing_summary, q22_dormant_customers,
-#       q2_min_cost_supplier, q3_shipping_priority,
-#       q5_local_supplier_volume, q7_volume_shipping, q8_market_share,
-#       sequence_packing_manifest, set_null_missing_region,
-#       sql_ml_inference_score, sql_q6_forecast_revenue,
-#       train_val_test_split_docs, training_shard_manifest,
-#       unigram_surprisal_filter, window_running_total,
-#       xml_roundtrip_orders, zorder_clustered_scan — 48 rows,
-#       leaving 2 slots for genuine round-13 newcomers and
-#       changed-engine rows (more newcomers displace covered fills,
-#       the standing convention);
-#   (b) fill any remaining slots with r10-stale rows, shape-starved
-#       first.
-# SLOT ARITHMETIC NOTE: (0)+(0b)+(a) as pre-staged = 2 + 3 + 48 = 53
-# named rows for 50 slots. Resolve at composition time exactly as
-# prior rotations did: the 5 (0)/(0b) rows are fixed (zero-evidence
-# newcomers and changed engine outrank stale-but-proven), so defer
-# the 3 r9-stale fills whose shapes fresher or in-gate rows best
-# cover (document each; candidates: pq_topk_embeddings — its ADC
-# kernel is carried by ivfpq_topk_embeddings + pq_recall_report in
-# the same list; ivf_nprobe_recall_curve — its recall-measurement
-# kernel is carried by pq_recall_report and the r12-green
-# embedding_knn_join rows... choose from the list against r13's
-# actual newcomer set) to round 14's front, which the then-emptied
-# backlog easily absorbs.
-# ROUND-13 ROTATION (composed at round-13 start, exactly as round 12
-# pre-staged it, then amended in-round as the round's own engine
-# changes and newcomer landed. FINAL slot arithmetic: 2 (0) + 3 (0b)
-# + 2 (0c, round-13 changed engine) + 1 newcomer + 42 (a)-fills = 50;
-# 48 r9-stale rows minus 42 fills = 6 deferrals, each documented
-# below — 3 from the pre-staged 53-for-50 resolution plus 3 displaced
-# by the (0c) rows and the newcomer):
-#   (0) the 2 late-round-12 newcomers, never driver-gated (the only
-#       registered queries with zero driver evidence):
-#       gopher_quality_docs + line_dedup_docs — both oracle-parity
-#       green at sf0.001+sf0.01 at add time with 10x SCALE rows
-#       already recorded (SCALE.md "Round 12 probes");
-#   (0b) the 3 owed tick-hoist changed-engine rows: the late-round-12
-#       optimization pass rewrote the shared quantized-scoring tail
-#       (similarity.py: vectors quantized ONCE before pair/scan
-#       fan-out, bit-identical, 4.3x measured) and embedding_knn_join
-#       (brute kernel, newest green r10) plus embedding_knn_join_inline
-#       / embedding_knn_join_routed (newest green r11) route through
-#       it but could not fit round 12's committed 50;
-#   (0c) ROUND-13 changed-engine rows (changed engine outranks fresh
-#       evidence, even r12-fresh): lang_id_docs + lang_id_confusion —
-#       the round-13 A/B rewrote text.lang_id's execution shape
-#       (fused marker-map scoring, 221 s -> 17 s at 100x, identical
-#       matrices at 100x + oracle parity re-proven at sf0.001/sf0.01;
-#       SCALE.md round-13); both displace r9 fills under the standing
-#       rule (deferral justifications below);
-#   (a) 42 of the 48 rows whose newest green is r9 (set re-derived
-#       programmatically from CORRECTNESS_r01..r12 at composition
-#       time; matched the pre-staged list name-for-name). DEFERRED to
-#       round 14's front (each shape carried by fresher rows IN THIS
-#       GATE or r12-green):
-#       - pq_topk_embeddings: its ADC scoring kernel is carried
-#         in-gate by ivfpq_topk_embeddings + pq_recall_report;
-#       - ivf_nprobe_recall_curve: its recall-measurement kernel is
-#         carried in-gate by pq_recall_report and by the r12-green
-#         ivf_recall_report; its list-pruned scan shape by the
-#         r12-green ivf_partitioned_scan;
-#       - dedup_keep_canonical: its exact-fingerprint keep-one kernel
-#         is carried by the r12-green exact_dup_groups and in-gate by
-#         incremental_dedup_new_docs (keep-one against history
-#         through the same fingerprint kernel);
-#       - embedding_label_centroids (displaced by lang_id_docs): its
-#         centroid-aggregation kernel is carried by the r12-green
-#         kmeans_centroids_embeddings;
-#       - xml_roundtrip_orders (displaced by lang_id_confusion): the
-#         sources/files.py round-trip face is carried by the
-#         r12-green file_format_roundtrip_orders (CSV/JSONL/ORC
-#         through the same writer/reader seam; the XML branch is
-#         additionally pytest-pinned in test_sources);
-#       - hll_union_rollup (displaced by the round-13 newcomer
-#         gopher_repetition_docs): the mergeable-sketch rollup shape
-#         is carried by the r12-green kmv_distinct_users, and HLL's
-#         within-bound contract is pytest-pinned.
-# PRE-STAGED ROUND-14 ROTATION PLAN (compose at round-14 start):
-#   (0) any round-14 newcomers, gated at birth, displacing fills
-#       whose shapes fresher rows cover (document each);
-#   (0b) rows whose engine code round 14 changes;
-#   (a) the 6 round-13 deferrals above (pq_topk_embeddings,
-#       ivf_nprobe_recall_curve, dedup_keep_canonical,
-#       embedding_label_centroids, xml_roundtrip_orders,
-#       hll_union_rollup) — zero rounds of extra staleness allowed
-#       beyond the one documented here — plus the 47 rows whose
-#       newest green will then be r10 (re-derive from the
-#       CORRECTNESS files at rotation time); 6 + 47 = 53 for 50
-#       slots, resolved as every rotation does: defer the 3 r10
-#       fills whose shapes fresher rows best cover, documenting each.
-#
-# ROUND-14 ROTATION (ACTIVE): executed exactly as pre-staged, with
-# the prescribed at-rotation re-derivation. Composition:
-#   (0) FOUR newcomers, gated at birth (amended in-round, the
-#       round-13 precedent):
-#       nfc_normalize_docs — the Unicode NFC normalization audit that
-#       runs BEFORE hash-based dedup (composition-variant copies
-#       share no byte fingerprint without it). Full kit at add time:
-#       DuckDB oracle through duckdb's OWN nfc_normalize (a
-#       cross-implementation check of the Unicode tables),
-#       sf0.001+sf0.01 parity green, trigger docs covering each
-#       normalization phenomenon + hypothesis property vs unicodedata
-#       (tests/test_properties.py), 10x/100x SCALE rows (1.75 s /
-#       6.33 s warm — one Arrow map pass, no shuffle). Displaces
-#       kmv_sketch_rollup (deferral documented below);
-#       domain_blocklist_filter — UT1-style domain blocklist verdicts
-#       (blocked iff hostname is, or is a subdomain of, a listed
-#       domain on LABEL boundaries; longest match wins attribution —
-#       the crawl-curation front door C4/RefinedWeb run before any
-#       content pass). Full kit at add time: independent DuckDB
-#       oracle (string_split + generate_series suffixes + struct_pack
-#       max), sf0.001+sf0.01 driver-style parity green, six staged
-#       hostname phenomena each pinned (incl. the notads label-
-#       boundary trap and nested-entry longest-match), hypothesis
-#       property vs an exact Python model (which caught the NULL-host
-#       row-drop at birth -> explode_outer), 10x/100x SCALE rows
-#       (0.99 s / 5.26 s warm — explode + broadcast join + ONE keyed
-#       max-struct agg, partial agg before the only shuffle).
-#       Displaces hll_distinct_users (deferral documented below);
-#       c4_line_filter_docs — C4 LINE-level cleaning (Raffel et al.
-#       2020 §2.2), the stage the doc-level c4_quality_filter_stats
-#       does not cover: per-line first-failing-rule retention
-#       (terminal punctuation -> >=5 words -> no 'javascript'),
-#       byte-exact ordered reassembly of the kept lines, then the
-#       page rules (lorem ipsum -> brace -> too-few-kept-lines) over
-#       what survived. ONE bound struct over the line array split
-#       once per row — zero shuffles, zero UDFs, lambda pipeline
-#       mirrored in DuckDB via list_filter. Full kit at add time:
-#       sf0.001+sf0.01 driver-style parity green, per-class trigger
-#       assertions (every per-line counter non-zero on every page),
-#       hypothesis property vs an exact Python model, plan-lint
-#       clean, 10x/100x SCALE rows (1.32 s / 7.79 s warm, ~linear).
-#       Displaces repetition_profile_docs (deferral documented
-#       below);
-#       robots_txt_filter — robots.txt crawl-permission verdicts
-#       (RFC 9309 / Google semantics: longest matching prefix
-#       decides, Allow beats Disallow on a length tie, no match =
-#       allowed; the empty-Disallow allow-all idiom and absent
-#       robots.txt both staged as NO rule rows). The other half of
-#       the crawl-permission front door next to
-#       domain_blocklist_filter. Shape: broadcast rules dim,
-#       domain-equi join with startswith in the condition (verified
-#       BroadcastHashJoin, zero cartesians), one keyed max-struct
-#       aggregate. Full kit at add time: independent DuckDB oracle
-#       (struct_pack max over LEFT-joined rules),
-#       sf0.001+sf0.01 driver-style parity green, per-class trigger
-#       assertions (all three example.com outcomes proven
-#       non-vacuous), hypothesis property vs an exact Python model,
-#       plan-lint clean, 10x/100x/1000x SCALE rows (1.13 / 1.36 /
-#       6.49 s — sublinear, 32-partition probe per the SCALE.md
-#       probe rule). Displaces text_profile_docs (deferral
-#       documented below);
-#   (0b) 4 changed-engine rows (changed engine outranks fresh
-#       evidence): gopher_repetition_docs (trigger staging now
-#       derives its doc_id base from max(doc_id)+1 in BOTH engines,
-#       and the column face's _ppm/tokenizer carried the r13 ADVICE
-#       fixes — the faces-agree test pins the shipped Arrow face to
-#       it), plus the three span-store queries whose production fold
-#       path gained default post-compaction retention
-#       (SPAN_VACUUM_RETAIN): span_clean_and_fold_docs,
-#       incremental_span_removal_docs, gram_novelty_docs.
-#       bm25i_incremental_index's fold also changed
-#       (POSTINGS_VACUUM_RETAIN) but it is r10-stale and sits in (a)
-#       anyway; the para-store fold changed too but no registered
-#       query calls it (test_compaction_cadence pins it). Late
-#       round-14 engine change: winnow_fingerprints gained the
-#       _bind_once rebind (181x at sf0.1, values oracle-identical) —
-#       its owner row winnow_fingerprint_docs was already in (a), so
-#       the changed-engine obligation is satisfied in-gate.
-#   (a) the 6 r13 deferrals (all six in-gate — zero extra rounds of
-#       staleness, as the ledger required) + the r10-stale set
-#       RE-DERIVED from CORRECTNESS_r01..r13 at rotation time =
-#       45 rows, not the 47 the pre-staging estimated (the estimate
-#       was made before r13's own gate landed; the re-derivation is
-#       authoritative, per the standing rule). 4 + 4 + 6 + 45 = 59
-#       for 50 slots -> defer 9 r10 fills whose shapes fresher rows
-#       best cover (zero extra rounds of staleness allowed — all
-#       nine MUST be in round 15's gate):
-#       - q14_promo_revenue: the promo-share agg shape is carried
-#         by the r13-green promo_revenue_ratio;
-#       - dedup_exact_count: the exact-fingerprint kernel is carried
-#         by the r12-green exact_dup_groups and the r13-green
-#         incremental_dedup_new_docs;
-#       - decontaminate_docs: the broadcast-set gram-probe regime's
-#         kernel (word_ngram_rows) is carried by the r13-green
-#         ngram_decontaminate_docs and the in-gate
-#         bloom_decontaminate_docs (third regime, same kernel);
-#       - dedup_span_removal_docs: the ExactSubstr span kernel is
-#         carried by the r13-green dup_span_coverage_docs and the
-#         in-gate incremental_span_removal_docs;
-#       - simhash_docs: the simhash signature kernel is carried by
-#         the r12-green simhash_neardup_docs (banded Hamming-ball
-#         face of the same signatures);
-#       - kmv_sketch_rollup (displaced by the nfc_normalize_docs
-#         newcomer): the mergeable-sketch rollup shape is carried by
-#         the in-gate hll_union_rollup and the r12-green
-#         kmv_distinct_users (same KMV kernel);
-#       - hll_distinct_users (displaced by the
-#         domain_blocklist_filter newcomer): the HLL register kernel
-#         is carried IN-GATE by hll_union_rollup (the union face over
-#         the same per-key registers), and the within-bound estimate
-#         contract is pytest-pinned (tests/test_sketch.py);
-#       - repetition_profile_docs (displaced by the
-#         c4_line_filter_docs newcomer): its within-document
-#         dup-n-gram kernel (ngram_repetition) is carried IN-GATE by
-#         gopher_repetition_docs — the r13 newcomer generalized the
-#         same family to the full Gopher A1.2 signal set over the
-#         same tokenizer, and is itself a (0b) changed-engine row in
-#         this gate;
-#       - text_profile_docs (displaced by the robots_txt_filter
-#         newcomer): its per-doc integer ratio-profiling shape
-#         (length/punct/stopword counters over the shared tokenizer)
-#         is carried by the r13-green gopher_quality_docs and
-#         c4_quality_filter_stats — the same tokenizer and the same
-#         exact-integer ratio-rule audit pattern, with stricter
-#         verdict logic on top.
-# PRE-STAGED ROUND-15 ROTATION PLAN (compose at round-15 start):
-#   (0) any round-15 newcomers, gated at birth; (0b) rows whose
-#       engine round 15 changes; (a) the 9 round-14 deferrals above
-#       (q14_promo_revenue, dedup_exact_count, decontaminate_docs,
-#       dedup_span_removal_docs, simhash_docs, kmv_sketch_rollup,
-#       hll_distinct_users, repetition_profile_docs,
-#       text_profile_docs — zero extra rounds of staleness, all
-#       confirmed r10-newest by this round's end-of-round
-#       re-derivation) + the rows whose newest
-#       green will then be r11: 46 by the END-OF-ROUND-14
-#       re-derivation over CORRECTNESS_r01..r13 + the final front-50
-#       (not the 47 the mid-round estimate said — the in-round
-#       amendments moved the count; RE-DERIVE again at rotation time
-#       once CORRECTNESS_r14 exists, the re-derivation is always
-#       authoritative). The derived 46, name-for-name: agg_rollup,
-#       array_functions_showcase, audit_counts,
-#       cluster_balanced_sample, coercion_showcase,
-#       conditional_agg_returnflag, csv_quarantine_split,
-#       datetime_functions_showcase, decontaminate_span_removal_docs,
-#       deterministic_sample_orders, dsir_importance_sample,
-#       embedding_neardup_pairs, embedding_neardup_store,
-#       exists_returned_orders, fuzzy_match_customers,
-#       grouping_sets_revenue, groupwise_min_cheapest_parts,
-#       incremental_dsir_sample, incremental_pipeline_events,
-#       incremental_rollup_orders, join_semi_customers_with_orders,
-#       null_handling_showcase, per_source_cap_sample,
-#       q10_returned_items, q11_important_parts,
-#       q12_priority_by_linestatus, q16_supplier_diversity,
-#       q20_heavy_part_suppliers, q21_sole_late_shippers,
-#       q4_priority_late_ship, q9_product_type_profit,
-#       quality_percentile_by_source,
-#       quantiles_order_value_by_status, range_join_event_bursts,
-#       replace_order_items, scalar_functions_showcase,
-#       scd2_user_event_history, setops_bag_semantics,
-#       snapshot_diff_orders, stratified_sample_orders,
-#       subquery_small_quantity_revenue, tfidf_top_terms,
-#       unpivot_nation_balances, watermark_resolution_matrix,
-#       window_navigation_showcase, window_rank_price_in_status.
-#       9 + 46 = 55 for 50 -> defer 5 r11 fills whose shapes fresher
-#       rows best cover, documenting each (candidates with the
-#       cleanest carries: scalar_functions_showcase /
-#       null_handling_showcase / datetime_functions_showcase — pure
-#       scalar-expression showcases whose kernels pytest pins and
-#       whose shapes coercion_showcase (in that gate) shares — and
-#       embedding_neardup_store, whose store-probe shape the
-#       in-that-gate embedding_neardup_pairs + r12-green
-#       web_manifest_store_scored carry; decide against round 15's
-#       actual newcomer set at composition time).
-_ROUND14_FRONT_50 = [
-    # (0) the four round-14 newcomers, gated at birth
+
+_FRONT_50 = [
     "nfc_normalize_docs",
     "domain_blocklist_filter",
     "c4_line_filter_docs",
     "robots_txt_filter",
-    # (0b) the 4 changed-engine rows
     "gopher_repetition_docs",
     "span_clean_and_fold_docs",
     "incremental_span_removal_docs",
     "gram_novelty_docs",
-    # (a) the 6 r13 deferrals — the oldest evidence in the registry
     "pq_topk_embeddings",
     "ivf_nprobe_recall_curve",
     "dedup_keep_canonical",
     "embedding_label_centroids",
     "xml_roundtrip_orders",
     "hll_union_rollup",
-    # (a) 36 of the 45 r10-stale rows (9 deferred, documented above)
     "agg_cube",
     "agg_distinct_count",
     "anomaly_zscore_daily_revenue",
@@ -908,654 +169,6 @@ _ROUND14_FRONT_50 = [
     "window_latest_order_per_customer",
     "window_moving_avg_daily_revenue",
     "winnow_fingerprint_docs",
-]
-
-_ROUND13_FRONT_50 = [
-    # (0) the 2 late-round-12 newcomers — first driver evidence
-    "gopher_quality_docs",
-    "line_dedup_docs",
-    # (0b) the 3 owed tick-hoist changed-engine re-gates
-    "embedding_knn_join",
-    "embedding_knn_join_inline",
-    "embedding_knn_join_routed",
-    # (0c) round-13 changed engine: the fused marker-map lang_id
-    "lang_id_docs",
-    "lang_id_confusion",
-    # (a) 42 of the 48 r9-stale rows (6 deferred, documented above)
-    "applyinpandas_group_ols",
-    "approx_quantile_order_totals",
-    "boilerplate_ngram_stats",
-    "bucketed_join_revenue",
-    "c4_quality_filter_stats",
-    "collocations_top_pmi",
-    "copurchase_pagerank_3iter",
-    "curation_pipeline_manifest",
-    "domain_mixture_resample",
-    "dup_span_coverage_docs",
-    "gapfill_daily_revenue",
-    "heavy_hitter_tokens",
-    "hierarchy_closure_part",
-    "incremental_dedup_new_docs",
-    "ivfpq_topk_embeddings",
-    "key_skew_profile_events",
-    "minhash_lsh_neardup_pairs",
-    "monthly_revenue_trend",
-    "multimodal_manifest",
-    "neardup_components",
-    "neardup_threshold_curve",
-    "ngram_decontaminate_docs",
-    "pq_codebook_embeddings",
-    "pq_recall_report",
-    "promo_revenue_ratio",
-    "q17_small_quantity_revenue",
-    "q1_pricing_summary",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "sequence_packing_manifest",
-    "set_null_missing_region",
-    "sql_ml_inference_score",
-    "sql_q6_forecast_revenue",
-    "train_val_test_split_docs",
-    "training_shard_manifest",
-    "unigram_surprisal_filter",
-    "window_running_total",
-    "zorder_clustered_scan",
-    # slot 50: the round-13 newcomer, gated at birth (Gopher A1.2
-    # within-document repetition family; displaced hll_union_rollup
-    # under the documented deferral above)
-    "gopher_repetition_docs",
-]
-
-_ROUND12_FRONT_50 = [
-    # (0) the 7 pre-staged late-round-11 newcomers, gated at birth
-    "ctfidf_source_terms",
-    "html_extract_docs",
-    "url_normalize_dedup",
-    "web_curation_pipeline_manifest",
-    "dup_cluster_histogram",
-    "lang_id_confusion",
-    "simhash_neardup_docs",
-    # ... plus the ONE genuine round-12 newcomer: the web manifest
-    # scored against the persisted DSIR model store (folded ≡
-    # one-shot law; oracle = the in-query manifest's SQL)
-    "web_manifest_store_scored",
-    # (0b) the owed changed-engine row from late round 11
-    "lang_id_docs",
-    # (a) ALL 41 rows whose newest green is r8 — the entire
-    # remaining evidence debt, retired in one gate
-    "asof_purchase_to_view",
-    "attribution_interval_join",
-    "attribution_lambda_parity",
-    "bm25i_index_retrieval",
-    "bpe_segment_stats",
-    "bpe_train_merges",
-    "cohort_retention_daily",
-    "copurchase_part_pairs",
-    "copurchase_triangles",
-    "embedding_quantize_int8",
-    "embedding_topk_bruteforce",
-    "embedding_topk_ivf",
-    "embedding_topk_lsh",
-    "events_session_windows",
-    "events_sliding_windows",
-    "events_time_grain_rollup",
-    "events_tumbling_hourly",
-    "exact_dup_groups",
-    "file_format_roundtrip_orders",
-    "funnel_view_click_purchase",
-    "hybrid_rrf_retrieval",
-    "int8_rank_fidelity",
-    "ivf_assign_narrow_parity",
-    "ivf_index_roundtrip",
-    "ivf_partitioned_scan",
-    "ivf_recall_report",
-    "json_props_rollup",
-    "keep_latest_event_per_user",
-    "kmeans_centroids_embeddings",
-    "kmv_distinct_users",
-    "longest_active_streaks",
-    "lsh_recall_report",
-    "merge_upsert_events",
-    "mp4_keyframe_parity",
-    "nested_flatten_roundtrip",
-    "pandas_udf_mask_names",
-    "semantic_dedup_embeddings",
-    "sessionize_user_events",
-    "skew_salted_event_totals",
-    "token_count_by_source",
-    "variant_props_extract",
-]
-
-_ROUND11_FRONT_50 = [
-    # (0) round-11 newcomers, gated at birth
-    "decontaminate_span_removal_docs",
-    "per_source_cap_sample",
-    "quality_percentile_by_source",
-    "embedding_knn_join_inline",
-    "dsir_importance_sample",
-    "cluster_balanced_sample",
-    "incremental_dsir_sample",
-    # (0b) engine code changed this round
-    "incremental_span_removal_docs",
-    "embedding_neardup_store",
-    # (a) the 33 r6-stale rows — the entire remaining evidence debt
-    "scalar_functions_showcase",
-    "array_functions_showcase",
-    "null_handling_showcase",
-    "coercion_showcase",
-    "datetime_functions_showcase",
-    "window_navigation_showcase",
-    "setops_bag_semantics",
-    "unpivot_nation_balances",
-    "groupwise_min_cheapest_parts",
-    "quantiles_order_value_by_status",
-    "deterministic_sample_orders",
-    "stratified_sample_orders",
-    "conditional_agg_returnflag",
-    "subquery_small_quantity_revenue",
-    "audit_counts",
-    "window_rank_price_in_status",
-    "q10_returned_items",
-    "exists_returned_orders",
-    "join_semi_customers_with_orders",
-    "agg_rollup",
-    "grouping_sets_revenue",
-    "incremental_rollup_orders",
-    "replace_order_items",
-    "q4_priority_late_ship",
-    "q9_product_type_profit",
-    "q11_important_parts",
-    "q12_priority_by_linestatus",
-    "q16_supplier_diversity",
-    "q20_heavy_part_suppliers",
-    "q21_sole_late_shippers",
-    "snapshot_diff_orders",
-    "tfidf_top_terms",
-    "embedding_neardup_pairs",
-    # (b) eleven r8-stale fills at rotation time, shape-starved first
-    "watermark_resolution_matrix",
-    "scd2_user_event_history",
-    "incremental_pipeline_events",
-    "csv_quarantine_split",
-    "span_clean_and_fold_docs",
-    "gram_novelty_docs",
-    "range_join_event_bursts",
-    "fuzzy_match_customers",
-]
-
-_ROUND10_FRONT_50 = [
-    # (0) engine code changed this round, plus the round-10 newcomer
-    # embedding_knn_join_routed (gated at birth per convention: the
-    # auto-routed IVF kernel forced via max_query_batch=1 at FULL
-    # probe depth, where it is exact — the brute oracle hash-proves
-    # the routed kernel itself). It displaces snapshot_diff_orders
-    # (r6-green on untouched code; its TableStore versioned-read
-    # round-trip shape stays gated via the in-gate
-    # time_travel_orders_versions)
-    "embedding_knn_join_routed",
-    # dedup_span_removal_docs — the SECOND round-10 newcomer, gated at
-    # birth (operators/dedup.remove_dup_spans: the ExactSubstr CLEANUP
-    # half — keep-one-canonical span deletion producing the cleaned
-    # corpus; the oracle hash-proves the rebuilt strings byte-for-
-    # byte). It displaces tfidf_top_terms (r6-green on untouched code;
-    # its tokenize + document-frequency + idf-ranking kernel stays
-    # gated via the in-gate bm25i_retrieval_docs, which computes the
-    # same df/idf family end to end)
-    "dedup_span_removal_docs",
-    # incremental_span_removal_docs — the THIRD round-10 newcomer,
-    # gated at birth (operators/span_index: the persisted gram index
-    # — the shared fold harness's sixth store — cleaning each batch
-    # against history without rescanning it; the oracle is the
-    # one-shot SQL via the sequential ≡ one-shot law). It displaces
-    # embedding_neardup_pairs (r6-green on untouched code; its
-    # embedding near-dup candidate+verify shape stays gated via the
-    # fresher in-gate embedding_neardup_store and the r9-green
-    # neardup_threshold_curve)
-    "incremental_span_removal_docs",
-    "embedding_knn_join",
-    "embedding_neardup_store",
-    "minhash_store_neardup",
-    "bm25i_incremental_index",
-    "paragraph_dedup_docs",
-    "bloom_decontaminate_docs",
-    # (a) the 25 remaining r4-stale deferrals
-    "decontaminate_docs",
-    "agg_cube",
-    "agg_distinct_count",
-    "anomaly_zscore_daily_revenue",
-    "data_profile_orders",
-    "hierarchy_subtree_rollup",
-    "join_anti_orphan_audit",
-    "join_full_outer_balance",
-    "join_left_enrich",
-    "pivot_status_by_priority",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q18_large_volume_customers",
-    "q19_discount_revenue",
-    "scalar_subquery_rich_idle_customers",
-    "setops_customer_nations",
-    "topk_expensive_orders",
-    "window_latest_order_per_customer",
-    "window_moving_avg_daily_revenue",
-    "q14_promo_revenue",
-    "hll_distinct_users",
-    "dedup_exact_count",
-    "multimodal_frame_sample",
-    "kmv_sketch_rollup",
-    "minhash_signatures",
-    # (b) sixteen r6-stale rows (nineteen at rotation time;
-    # snapshot_diff_orders, tfidf_top_terms, and
-    # embedding_neardup_pairs displaced mid-round by the three
-    # newcomers above), shape-starved first
-    "simhash_docs",
-    "winnow_fingerprint_docs",
-    "image_dhash_parity",
-    "audio_fingerprint_parity",
-    "video_neardup_parity",
-    "perceptual_checker_parity",
-    "mp4_container_parity",
-    "bm25i_retrieval_docs",
-    "lang_id_docs",
-    "text_profile_docs",
-    "repetition_profile_docs",
-    "chunk_documents_stats",
-    "pii_redact_docs",
-    "pandas_udaf_weighted_price",
-    "udtf_word_positions",
-    "time_travel_orders_versions",
-]
-
-# PRE-STAGED ROUND-10 ROTATION PLAN (executed above at round-10
-# start, exactly as written; kept for the ledger):
-#   (0) any round-10 newcomers, gated at birth per convention;
-#   (a) the 24 documented round-10 deferrals listed above (the ONLY
-#       rows whose newest green predates r6 — all r4) — they must ALL
-#       enter, retiring the r4 debt the way r9 retired r3's;
-#   (b) fill to 50 with the most-starved remaining rows, prioritizing
-#       (b1) the r9-displaced decontaminate_docs + embedding_knn_join,
-#       (b2) rows whose newest green is r6 (the round-5 list ran in
-#       rounds 5 AND 6; see _ROUND5_FRONT_50), never rows the r9 gate
-#       just refreshed. Update this ledger and the deferral list when
-#       composing, as every rotation has.
-_ROUND9_FRONT_50 = [
-    # (0) never gated / new this round (dup_span_coverage_docs is the
-    # second round-9 newcomer — gated at birth per convention; it
-    # displaces hll_distinct_users, whose HLL engine path stays gated
-    # through hll_union_rollup)
-    "ivf_nprobe_recall_curve",
-    "neardup_threshold_curve",
-    "ngram_decontaminate_docs",
-    "dup_span_coverage_docs",
-    "pq_codebook_embeddings",
-    "pq_topk_embeddings",
-    "pq_recall_report",
-    "ivfpq_topk_embeddings",
-    # (0e) minhash_store_neardup, the NINTH round-9 newcomer (persisted
-    # MinHash feature index: featurize-at-ingest batch-vs-store
-    # near-dup, operators/minhash_index.py) — enters at birth,
-    # displacing decontaminate_docs (r4-green on untouched code; its
-    # broadcast-membership-probe engine path is r8-green via
-    # bloom_decontaminate_docs and its join-regime twin
-    # ngram_decontaminate_docs is in-gate above; it heads the round-10
-    # deferral list)
-    "minhash_store_neardup",
-    # (0f) embedding_neardup_store, the TENTH round-9 newcomer (the
-    # modality twin of (0e): batch-vs-store near-dup in embedding
-    # space through the IVF assignment-at-ingest layout,
-    # similarity.embedding_neardup_against_store + ivf_probe_expr) —
-    # enters at birth, displacing embedding_knn_join (r4-green on
-    # untouched code; its brute cross-join kernel is the r8-green
-    # embedding_topk_bruteforce path, and the probe-pruned embedding
-    # JOIN shape is now covered by this fresher row; it joins the
-    # round-10 deferral list)
-    "embedding_neardup_store",
-    # (a) the eighteen r3-stale deferrals
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "sql_q6_forecast_revenue",
-    "promo_revenue_ratio",
-    "monthly_revenue_trend",
-    "gapfill_daily_revenue",
-    "window_running_total",
-    "set_null_missing_region",
-    "embedding_label_centroids",
-    "heavy_hitter_tokens",
-    "boilerplate_ngram_stats",
-    "collocations_top_pmi",
-    "copurchase_pagerank_3iter",
-    "train_val_test_split_docs",
-    "c4_quality_filter_stats",
-    # (b) twenty-four r4-stale rows, LLM-pipeline and round-trip
-    # shapes no fresher gate row covers
-    "dedup_keep_canonical",
-    "minhash_lsh_neardup_pairs",
-    "neardup_components",
-    "incremental_dedup_new_docs",
-    "curation_pipeline_manifest",
-    "domain_mixture_resample",
-    "sequence_packing_manifest",
-    "training_shard_manifest",
-    "unigram_surprisal_filter",
-    "sql_ml_inference_score",
-    "multimodal_manifest",
-    "key_skew_profile_events",
-    "hll_union_rollup",
-    "applyinpandas_group_ols",
-    "approx_quantile_order_totals",
-    "xml_roundtrip_orders",
-    "zorder_clustered_scan",
-    "bucketed_join_revenue",
-    "hierarchy_closure_part",
-    "q2_min_cost_supplier",
-    "q17_small_quantity_revenue",
-    "q22_dormant_customers",
-]
-
-# Round 7 gate (ran in rounds 7 AND 8; kept for the rotation ledger).
-# Composition (ledger computed from the three prior lists; r5's list
-# also ran in round 6, so "r5" evidence below means r6-fresh):
-#   (0) the 14 queries with ZERO driver evidence — the whole round-6
-#       debt plus this round's additions: the four VERDICT r6 named
-#       (kmeans_centroids_embeddings, mp4_keyframe_parity,
-#       copurchase_triangles, attribution_interval_join), the seven
-#       round-2 deferrals carried since r5 (embedding_topk trio,
-#       embedding_quantize_int8, pandas_udf_mask_names,
-#       exact_dup_groups, token_count_by_source), and the three NEW
-#       round-7 gates (ivf_index_roundtrip, bm25i_index_retrieval,
-#       attribution_lambda_parity),
-#   (a) semantic_dedup_embeddings — r6-green but its engine path AND
-#       oracle were rewritten this round (persisted-index assignment),
-#       so the old green row no longer covers the code,
-#   (b) the 13 events readers + streaming batch twins whose newest
-#       green row is r3 (VERDICT r6 missing #4),
-#   (c) the 11 remaining never-refreshed r3 group-(a) rows
-#       (cohort/streaks/fuzzy/copurchase pairs/funnel/file formats/
-#       quarantine/nested flatten/incremental pipeline/json props/
-#       variant props),
-#   (d) the eleven queries added late in round 7
-#       (ivf_partitioned_scan, bm25i_incremental_index,
-#       hybrid_rrf_retrieval, ivf_assign_narrow_parity,
-#       paragraph_dedup_docs, bloom_decontaminate_docs,
-#       bpe_train_merges, bpe_segment_stats, lsh_recall_report,
-#       ivf_recall_report, int8_rank_fidelity — zero evidence
-#       outranks stale-but-proven, the r4 principle; each new
-#       addition displaced the most-stable r3-green backbone row:
-#       heavy_hitter_tokens, then q7_volume_shipping,
-#       q8_market_share, q5_local_supplier_volume,
-#       q3_shipping_priority, embedding_label_centroids,
-#       sql_q6_forecast_revenue, and finally the flagship
-#       q1_pricing_summary — r3-green, and its scan/filter/agg kernel
-#       is exercised by dozens of remaining gate rows — all on
-#       untouched code).
-# Registered OUTSIDE the front-50 this round (pytest oracle sweep
-# hash-gates them; front-50 candidates for round 8 alongside the
-# deferrals): ivf_nprobe_recall_curve and neardup_threshold_curve —
-# adding more late queries would displace group-(b)/(c) rows that
-# themselves need the refresh.
-# Deferred to round 8 (the ONLY rows whose newest green will then
-# predate r4): boilerplate_ngram_stats, collocations_top_pmi,
-# copurchase_pagerank_3iter, gapfill_daily_revenue,
-# monthly_revenue_trend, promo_revenue_ratio, set_null_missing_region,
-# window_running_total, train_val_test_split_docs,
-# c4_quality_filter_stats, heavy_hitter_tokens, q7_volume_shipping,
-# q8_market_share, q5_local_supplier_volume, q3_shipping_priority,
-# embedding_label_centroids, sql_q6_forecast_revenue,
-# q1_pricing_summary — all r3-green on code untouched since.
-_ROUND7_FRONT_50 = [
-    # (0) zero driver evidence
-    "kmeans_centroids_embeddings",
-    "ivf_index_roundtrip",
-    "bm25i_index_retrieval",
-    "attribution_lambda_parity",
-    "mp4_keyframe_parity",
-    "copurchase_triangles",
-    "attribution_interval_join",
-    "embedding_topk_bruteforce",
-    "embedding_topk_lsh",
-    "embedding_topk_ivf",
-    "embedding_quantize_int8",
-    "pandas_udf_mask_names",
-    "exact_dup_groups",
-    "token_count_by_source",
-    # (a) engine + oracle rewritten this round
-    "semantic_dedup_embeddings",
-    # (b) events readers + streaming twins, newest green r3
-    "events_time_grain_rollup",
-    "events_tumbling_hourly",
-    "events_sliding_windows",
-    "events_session_windows",
-    "asof_purchase_to_view",
-    "range_join_event_bursts",
-    "kmv_distinct_users",
-    "scd2_user_event_history",
-    "sessionize_user_events",
-    "watermark_resolution_matrix",
-    "skew_salted_event_totals",
-    "merge_upsert_events",
-    "keep_latest_event_per_user",
-    # (c) never-refreshed r3 group-(a) rows
-    "cohort_retention_daily",
-    "longest_active_streaks",
-    "fuzzy_match_customers",
-    "copurchase_part_pairs",
-    "funnel_view_click_purchase",
-    "file_format_roundtrip_orders",
-    "csv_quarantine_split",
-    "nested_flatten_roundtrip",
-    "incremental_pipeline_events",
-    "json_props_rollup",
-    "variant_props_extract",
-    # (d) the round-7 late additions (zero evidence at birth)
-    "ivf_partitioned_scan",
-    "bm25i_incremental_index",
-    "hybrid_rrf_retrieval",
-    "ivf_assign_narrow_parity",
-    "paragraph_dedup_docs",
-    "bloom_decontaminate_docs",
-    "bpe_train_merges",
-    "bpe_segment_stats",
-    "lsh_recall_report",
-    "ivf_recall_report",
-    "int8_rank_fidelity",
-]
-
-# Round 5 gate (ran in rounds 5 AND 6; kept for the rotation ledger).
-_ROUND5_FRONT_50 = [
-    # (0) queries NEW in round 5 — zero driver evidence yet
-    "video_neardup_parity",
-    "perceptual_checker_parity",
-    "mp4_container_parity",
-    "semantic_dedup_embeddings",
-    "bm25i_retrieval_docs",
-    # (a) the 21 rows round 4 displaced (VERDICT r4 item 1: these are
-    # "round 5's front-50 backbone"; all r1-proven except
-    # pii_redact_docs at r2, code unchanged, evidence stale)
-    "scalar_functions_showcase",
-    "array_functions_showcase",
-    "null_handling_showcase",
-    "coercion_showcase",
-    "datetime_functions_showcase",
-    "window_navigation_showcase",
-    "setops_bag_semantics",
-    "unpivot_nation_balances",
-    "pii_redact_docs",
-    "groupwise_min_cheapest_parts",
-    "quantiles_order_value_by_status",
-    "deterministic_sample_orders",
-    "stratified_sample_orders",
-    "conditional_agg_returnflag",
-    "subquery_small_quantity_revenue",
-    "audit_counts",
-    "window_rank_price_in_status",
-    "q10_returned_items",
-    "exists_returned_orders",
-    "join_semi_customers_with_orders",
-    "agg_rollup",
-    # (b) engine code changed this round: the sign-bucket cap
-    # (similarity.neardup_pairs), the codec guards (_dhash64
-    # truncation check, WAV channels=0), and the TableStore commit
-    # path (optimistic-concurrency plumbing)
-    "embedding_neardup_pairs",
-    "image_dhash_parity",
-    "audio_fingerprint_parity",
-    "time_travel_orders_versions",
-    # (c) newest green row is round 2 — oldest evidence first
-    # (20 of the 27 remaining r2 rows; deferred to round 6: the
-    # embedding_topk trio and embedding_quantize_int8, whose shared
-    # quantized-scoring kernel is represented in this gate by
-    # embedding_neardup_pairs and the r4-green embedding_knn_join,
-    # pandas_udf_mask_names, whose masking shape is represented by
-    # pii_redact_docs above, exact_dup_groups, whose fingerprint
-    # kernel twin dedup_exact_count is r4-green, and
-    # token_count_by_source, whose tokenizer kernel bm25i/tfidf/
-    # text_profile exercise in this gate)
-    "chunk_documents_stats",
-    "grouping_sets_revenue",
-    "incremental_rollup_orders",
-    "lang_id_docs",
-    "pandas_udaf_weighted_price",
-    "q11_important_parts",
-    "q12_priority_by_linestatus",
-    "q16_supplier_diversity",
-    "q20_heavy_part_suppliers",
-    "q21_sole_late_shippers",
-    "q4_priority_late_ship",
-    "q9_product_type_profit",
-    "repetition_profile_docs",
-    "replace_order_items",
-    "simhash_docs",
-    "snapshot_diff_orders",
-    "text_profile_docs",
-    "tfidf_top_terms",
-    "udtf_word_positions",
-    "winnow_fingerprint_docs",
-]
-
-# Round 4 gate (kept for the rotation ledger).
-_ROUND4_FRONT_50 = [
-    # (0) queries NEW in round 4 — zero driver evidence yet, so they
-    # outrank stale-but-proven rows (displaced to make room, per the
-    # module docstring: six static showcases, setops_bag_semantics,
-    # unpivot_nation_balances, pii_redact_docs — all back in round 5)
-    "sequence_packing_manifest",
-    "domain_mixture_resample",
-    "approx_quantile_order_totals",
-    "key_skew_profile_events",
-    "xml_roundtrip_orders",
-    "incremental_dedup_new_docs",
-    "training_shard_manifest",
-    "curation_pipeline_manifest",
-    "unigram_surprisal_filter",
-    "q2_min_cost_supplier",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q22_dormant_customers",
-    "kmv_sketch_rollup",
-    "hll_union_rollup",
-    "sql_ml_inference_score",
-    "zorder_clustered_scan",
-    "bucketed_join_revenue",
-    "image_dhash_parity",
-    "audio_fingerprint_parity",
-    # (a) engine code changed this round
-    "hll_distinct_users",
-    "anomaly_zscore_daily_revenue",
-    "window_moving_avg_daily_revenue",
-    "applyinpandas_group_ols",
-    "minhash_lsh_neardup_pairs",
-    "neardup_components",
-    "dedup_keep_canonical",
-    "minhash_signatures",
-    "dedup_exact_count",
-    "embedding_knn_join",
-    "hierarchy_closure_part",
-    "hierarchy_subtree_rollup",
-    "multimodal_manifest",
-    "multimodal_frame_sample",
-    "decontaminate_docs",
-    # (b) newest green row is round 1 — oldest evidence first
-    "agg_distinct_count",
-    "agg_cube",
-    "data_profile_orders",
-    "join_left_enrich",
-    "join_anti_orphan_audit",
-    "join_full_outer_balance",
-    "window_latest_order_per_customer",
-    "topk_expensive_orders",
-    "setops_customer_nations",
-    "scalar_subquery_rich_idle_customers",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q18_large_volume_customers",
-    "q19_discount_revenue",
-    "pivot_status_by_priority",
-]
-
-# Round 3 gate (kept for the rotation ledger).
-_ROUND3_FRONT_50 = [
-    # (a) never driver-checked (former slots 51-62)
-    "cohort_retention_daily",
-    "longest_active_streaks",
-    "fuzzy_match_customers",
-    "copurchase_part_pairs",
-    "funnel_view_click_purchase",
-    "file_format_roundtrip_orders",
-    "csv_quarantine_split",
-    "nested_flatten_roundtrip",
-    "incremental_pipeline_events",
-    "json_props_rollup",
-    "variant_props_extract",
-    "hll_distinct_users",
-    # (b) events readers — every input hash changed with the ts fix
-    "events_time_grain_rollup",
-    "events_tumbling_hourly",
-    "events_sliding_windows",
-    "events_session_windows",
-    "asof_purchase_to_view",
-    "range_join_event_bursts",
-    "kmv_distinct_users",
-    "scd2_user_event_history",
-    "sessionize_user_events",
-    "watermark_resolution_matrix",
-    "skew_salted_event_totals",
-    "merge_upsert_events",
-    "keep_latest_event_per_user",
-    # (c) engine code changed in round 3
-    "embedding_label_centroids",
-    "heavy_hitter_tokens",
-    "window_moving_avg_daily_revenue",
-    "anomaly_zscore_daily_revenue",
-    "gapfill_daily_revenue",
-    "monthly_revenue_trend",
-    "window_running_total",
-    "q3_shipping_priority",
-    # (c2) queries NEW in round 3 (corpus curation + UDF surface)
-    "train_val_test_split_docs",
-    "c4_quality_filter_stats",
-    "boilerplate_ngram_stats",
-    "collocations_top_pmi",
-    "dedup_keep_canonical",
-    "applyinpandas_group_ols",
-    "copurchase_pagerank_3iter",
-    "time_travel_orders_versions",
-    "embedding_knn_join",
-    # (d) round-1-proven relational set, oldest evidence first
-    "q1_pricing_summary",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "sql_q6_forecast_revenue",
-    "promo_revenue_ratio",
-    "hierarchy_closure_part",
-    "set_null_missing_region",
 ]
 
 
@@ -1570,7 +183,7 @@ def all_queries() -> dict[str, QueryFn]:
     for name in _RELATIONAL_NAMES:
         pool[name] = getattr(relational, name)
 
-    queries: dict[str, QueryFn] = {n: pool[n] for n in _ROUND14_FRONT_50}
+    queries: dict[str, QueryFn] = {n: pool[n] for n in _FRONT_50}
     for name, fn in pool.items():
         queries.setdefault(name, fn)
     assert len(queries) == len(pool), "front-50 must be a subset of the pool"

@@ -231,22 +231,11 @@ def widen_if_narrow(
     except OSError:
         return df
     spark = df.sparkSession
-    max_pb_conf = str(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    ).lower()
-    mult = 1
-    # Spark's byte-string parser also accepts two-letter suffixes
-    # ("128mb", "1gb"): strip a trailing 'b' FIRST, then the scale
-    # letter, or "128mb" would match only the 'b' and int("128m")
-    # raise (review finding, r15)
-    if max_pb_conf.endswith("b"):
-        max_pb_conf = max_pb_conf[:-1]
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if max_pb_conf.endswith(suffix):
-            max_pb_conf = max_pb_conf[: -len(suffix)]
-            mult = m
-            break
-    max_pb = int(max_pb_conf) * mult
+    # Spark's own byte-string parser: every suffix the conf accepts
+    # ("128mb", "1g", "2p") reads exactly as Spark reads it
+    max_pb = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        str(spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
+    )
     cores = spark.sparkContext.defaultParallelism
     if size // max_pb >= cores:
         return df
