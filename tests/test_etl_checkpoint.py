@@ -2,12 +2,19 @@
 
 from __future__ import annotations
 
+import os
+from datetime import datetime, timezone
+
+import pytest
+
+from tinyerp_etl_spark.etl import checkpoint
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
     STATUS_ERROR,
     STATUS_RUNNING,
     PageCheckpoint,
 )
+from tinyerp_etl_spark.etl.watermark import WatermarkStore
 
 
 def test_fresh_start_is_page_one(spark, tmp_path):
@@ -55,3 +62,47 @@ def test_running_counter_accumulates(spark, tmp_path):
     assert p.registros_processados == 150  # ref :208
     assert cp.percent_complete("estoques") == 50.0  # ref :211
     assert p.status_execucao == STATUS_RUNNING
+
+
+def test_advance_reads_the_store_once(spark, tmp_path):
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    cp.start("estoques", "01/08/2026 00:00:00")
+    reads = []
+    real = cp._read_all
+    cp._read_all = lambda: reads.append(1) or real()
+    cp.advance("estoques", 1, 4, 100)
+    assert len(reads) == 1
+
+
+def test_control_state_survives_leftover_temp_and_interrupted_write(
+    spark, tmp_path, monkeypatch
+):
+    """Checkpoint and watermark writes replace their file atomically: a
+    stray temp file from a crashed writer is ignored, and a write that
+    dies before the replace leaves the previous state readable."""
+    cp = PageCheckpoint(spark, str(tmp_path / "cp"))
+    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    t1 = datetime(2026, 8, 10, 8, 0, 0, tzinfo=timezone.utc)
+    cp.start("pedidos", "01/08/2026 00:00:00")
+    cp.advance("pedidos", 3, 9, 30)
+    wm.commit("pedidos", t1)
+    for name in ("cp", "wm"):  # a crashed writer's half-written temp file
+        with open(tmp_path / f".{name}.leftover", "w") as f:
+            f.write('{"pedidos": ')
+
+    def crash(src, dst):
+        raise OSError("crash before replace")
+
+    monkeypatch.setattr(checkpoint.os, "replace", crash)
+    with pytest.raises(OSError, match="crash"):
+        cp.advance("pedidos", 4, 9, 10)
+    with pytest.raises(OSError, match="crash"):
+        wm.commit("pedidos", datetime(2026, 8, 12, tzinfo=timezone.utc))
+    monkeypatch.undo()
+
+    p = cp.progress("pedidos")
+    assert (p.pagina_atual, p.registros_processados) == (3, 30)
+    assert cp.start("pedidos", "01/08/2026 00:00:00") == 4
+    assert wm.get("pedidos") == t1
+    # the interrupted writes left no temp files of their own
+    assert sorted(os.listdir(tmp_path)) == [".cp.leftover", ".wm.leftover", "cp", "wm"]

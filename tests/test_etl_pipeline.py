@@ -7,6 +7,8 @@ system and a page source that serves it in date-filtered pages.
 
 from __future__ import annotations
 
+import os
+import threading
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -18,6 +20,7 @@ from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_RUNNING,
     PageCheckpoint,
 )
+from tinyerp_etl_spark.etl.merge import merge_upsert
 from tinyerp_etl_spark.etl.pipeline import EntitySync, run_entity_sync, run_pipeline
 from tinyerp_etl_spark.etl.table_store import TableStore
 from tinyerp_etl_spark.etl.watermark import WatermarkStore
@@ -146,12 +149,104 @@ def test_source_failure_marks_error_and_resumes(spark, sf_dir, stores):
     assert res.status == STATUS_ERROR
     assert res.error and "boom" in res.error
     assert wm.get("events") is None
+    # the ERRO step leaves page 1's delta layer; reads resolve it
+    assert _has_delta(tgt)
+    assert tgt.read().count() == PAGE_SIZE
     # recovery with the healthy source resumes at page 2, not page 1
     cfg2 = _sync_cfg(spark, sf_dir, tgt)
     res2 = run_entity_sync(spark, cfg2, wm, cp, now=NOW)
     assert res2.status == STATUS_DONE
     full = run_full_expected(spark, sf_dir)
     assert tgt.read().count() == full
+    # ...and folds: the table at rest is flat and equals the one-shot table
+    assert not _has_delta(tgt)
+    assert _sorted_rows(tgt.read()) == _sorted_rows(_window_events(spark, sf_dir))
+
+
+def _has_delta(store):
+    return os.path.isdir(os.path.join(store._version_dir(store.current_version()), "_delta"))
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.select(*TABLES["events"].fieldNames()).collect())
+
+
+def _window_events(spark, sf_dir):
+    return load_table(spark, sf_dir, "events").filter(
+        F.col("ts") > F.lit((NOW - timedelta(days=60)).replace(tzinfo=None))
+    )
+
+
+def test_concurrent_commit_during_page_write_fails_step_and_loses_no_rows(
+    spark, sf_dir, stores
+):
+    """A writer that commits while page 2 is being written must not be
+    silently overwritten: the page's upsert is pinned to the version it
+    read, so the step ends ERRO and the next run resumes at page 2."""
+    wm, cp, tgt = stores
+    extra = (
+        load_table(spark, sf_dir, "events")
+        .limit(1)
+        .withColumn("event_id", F.col("event_id") + 91_000_000)
+    )
+    other = TableStore(spark, tgt.path, TABLES["events"])
+    real_write = tgt._stage_write
+    writes = {"n": 0}
+
+    def racing_write(*a, **kw):
+        writes["n"] += 1
+        if writes["n"] == 2:  # page 2's write: a concurrent commit lands
+            other.commit(merge_upsert(other.read(), extra, ["event_id"]))
+        return real_write(*a, **kw)
+
+    tgt._stage_write = racing_write
+    try:
+        res = run_entity_sync(spark, _sync_cfg(spark, sf_dir, tgt), wm, cp, now=NOW)
+    finally:
+        del tgt._stage_write
+    assert res.status == STATUS_ERROR
+    assert "during the write" in res.error
+    assert cp.progress("events").pagina_atual == 1
+    assert tgt.read().filter(F.col("event_id") >= 91_000_000).count() == 1
+
+    res2 = run_entity_sync(spark, _sync_cfg(spark, sf_dir, tgt), wm, cp, now=NOW)
+    assert res2.status == STATUS_DONE
+    assert not _has_delta(tgt)
+    assert _sorted_rows(tgt.read()) == _sorted_rows(
+        _window_events(spark, sf_dir).unionByName(extra)
+    )
+
+
+def test_records_count_raw_page_rows_and_empty_pages_finish(spark, sf_dir, stores):
+    """records counts every raw page row, in-page duplicates included,
+    from the page's own write; a page the optimizer proves empty still
+    finishes (an Observation on such a plan is never filled)."""
+    wm, cp, tgt = stores
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 30)
+    pages = {
+        1: ev.unionByName(ev.filter(F.col("event_id") < 10)),  # 40 rows, 30 keys
+        2: ev.limit(0),
+        3: ev.filter(F.lit(False)),
+        4: spark.createDataFrame([], ev.schema),
+    }
+    cfg = EntitySync(
+        name="events",
+        source=lambda _ts, page: (pages[page], len(pages)),
+        store=tgt,
+        keys=["event_id"],
+    )
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(res=run_entity_sync(spark, cfg, wm, cp, now=NOW)),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "run_entity_sync hung on an empty page"
+    res = out["res"]
+    assert (res.status, res.pages, res.records) == (STATUS_DONE, 4, 40)
+    assert cp.progress("events").registros_processados == 40
+    assert _sorted_rows(tgt.read()) == _sorted_rows(ev)
 
 
 def run_full_expected(spark, sf_dir):

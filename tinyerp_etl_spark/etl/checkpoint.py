@@ -12,38 +12,50 @@ and its three operations:
 - ``finish`` ≡ finalizar_progresso (ref :198): terminal status.
 
 In the Structured Streaming mirror this is exactly the checkpoint
-offset log; in batch mode it is a tiny driver-side parquet table —
-control state, not data, so single-row writes are correct here.
+offset log; in batch mode it is control state, not data — a few rows
+— so it is a JSON file written on the driver with no Spark job: a
+temp file beside it, then ``os.replace``. A reader sees the old rows
+or the new ones, never none (a crash before the replace leaves only an
+ignored temp file).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from tinyerp_etl_spark.functions.localdf import local_df
 
 STATUS_PENDING = "PENDENTE"
 STATUS_RUNNING = "EM_ANDAMENTO"
 STATUS_ERROR = "ERRO"
 STATUS_DONE = "CONCLUIDO"
 
-_SCHEMA = T.StructType(
-    [
-        T.StructField("processo", T.StringType(), False),
-        T.StructField("data_filtro_api", T.StringType()),
-        T.StructField("pagina_atual", T.IntegerType()),
-        T.StructField("total_paginas", T.IntegerType()),
-        T.StructField("registros_processados", T.LongType()),
-        T.StructField("timestamp_inicio", T.TimestampType()),
-        T.StructField("timestamp_ultima_pagina", T.TimestampType()),
-        T.StructField("status_execucao", T.StringType()),
-    ]
-)
+
+def write_json_atomic(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON: temp file, then os.replace."""
+    parent = os.path.dirname(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=parent, prefix=f".{os.path.basename(path)}.")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
+def read_json(path: str, default):
+    """The JSON value at ``path``, or ``default`` when there is no file."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
 
 
 @dataclass
@@ -57,50 +69,42 @@ class Progress:
 
 
 class PageCheckpoint:
-    """Parquet-backed page progress store (one row per process)."""
+    """JSON-file page progress store: one row per process, with the
+    reference's progress-table columns (ref :91)."""
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
+        """``spark`` is unused (the store runs no Spark job); the
+        argument keeps the control stores' common constructor."""
         self.path = path
 
     # -- storage ------------------------------------------------------
 
-    def _read_all(self):
-        if not os.path.exists(self.path):
-            return []
-        return self.spark.read.schema(_SCHEMA).parquet(self.path).collect()
+    def _read_all(self) -> dict[str, dict]:
+        return read_json(self.path, {})
 
-    def _get_row(self, process: str):
-        for r in self._read_all():
-            if r["processo"] == process:
-                return r
-        return None
+    def _get_row(self, process: str) -> dict | None:
+        return self._read_all().get(process)
 
-    def _upsert(self, process: str, **fields) -> None:
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = {r["processo"]: r.asDict() for r in self._read_all()}
-        cur = rows.get(
-            process,
-            {
-                "processo": process,
-                "data_filtro_api": None,
-                "pagina_atual": 0,
-                "total_paginas": 0,
-                "registros_processados": 0,
-                "timestamp_inicio": now,
-                "timestamp_ultima_pagina": now,
-                "status_execucao": STATUS_PENDING,
-            },
-        )
+    def _upsert(self, process: str, add_records: int = 0, **fields) -> None:
+        """Read once, update ``process``'s row (``add_records`` onto the
+        running counter), write back atomically."""
+        now = _now()
+        rows = self._read_all()
+        cur = rows.get(process) or {
+            "processo": process,
+            "data_filtro_api": None,
+            "pagina_atual": 0,
+            "total_paginas": 0,
+            "registros_processados": 0,
+            "timestamp_inicio": now,
+            "timestamp_ultima_pagina": now,
+            "status_execucao": STATUS_PENDING,
+        }
         cur.update(fields)
+        cur["registros_processados"] += add_records
         cur["timestamp_ultima_pagina"] = now
         rows[process] = cur
-        df = local_df(
-            self.spark,
-            [tuple(r[f.name] for f in _SCHEMA.fields) for r in rows.values()],
-            _SCHEMA,
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(self.path)
+        write_json_atomic(self.path, rows)
 
     # -- reference-contract operations --------------------------------
 
@@ -125,20 +129,18 @@ class PageCheckpoint:
             pagina_atual=0,
             total_paginas=0,
             registros_processados=0,
-            timestamp_inicio=datetime.now(timezone.utc).replace(tzinfo=None),
+            timestamp_inicio=_now(),
             status_execucao=STATUS_RUNNING,
         )
         return 1
 
     def advance(self, process: str, page: int, total_pages: int, n_records: int) -> None:
         """Commit one page (ref :205-215): running-counter accumulation."""
-        prev = self._get_row(process)
-        done = (prev["registros_processados"] if prev else 0) + n_records
         self._upsert(
             process,
+            add_records=n_records,
             pagina_atual=page,
             total_paginas=total_pages,
-            registros_processados=done,
             status_execucao=STATUS_RUNNING,
         )
 
@@ -165,3 +167,8 @@ class PageCheckpoint:
         if p is None or not p.total_paginas:
             return None
         return round(p.pagina_atual / p.total_paginas * 100, 1)
+
+
+def _now() -> str:
+    """UTC now as naive ISO text (the reference's control timestamps)."""
+    return datetime.now(timezone.utc).replace(tzinfo=None).isoformat()

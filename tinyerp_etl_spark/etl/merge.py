@@ -28,7 +28,7 @@ from pyspark.sql.window import Window
 def keep_latest(
     df: DataFrame,
     keys: Sequence[str],
-    order_by: Sequence[Column | str],
+    order_by: Sequence[Column | str] | None = None,
 ) -> DataFrame:
     """One row per key, keeping the first row under ``order_by``.
 
@@ -37,8 +37,11 @@ def keep_latest(
     latest may win (ON CONFLICT DO UPDATE applies them in arrival
     order; relationally we take the max-version row directly).
     ``order_by`` must be a total order (include a unique tiebreaker)
-    or the survivor is nondeterministic.
+    or the survivor is nondeterministic; without it any one row per
+    key survives (``dropDuplicates``).
     """
+    if order_by is None:
+        return df.dropDuplicates(list(keys))
     w = Window.partitionBy(*keys).orderBy(*order_by)
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -60,10 +63,7 @@ def merge_upsert(
     as: (existing ∖ incoming-keys) ∪ dedup(incoming). Idempotent:
     applying the same increment twice yields the same table.
     """
-    if order_by is not None:
-        incoming = keep_latest(incoming, keys, order_by)
-    else:
-        incoming = incoming.dropDuplicates(list(keys))
+    incoming = keep_latest(incoming, keys, order_by)
     survivors = existing.join(incoming.select(*keys), list(keys), "left_anti")
     return survivors.unionByName(incoming)
 

@@ -8,7 +8,19 @@ Re-expresses ``executar_etapa_paginada`` (ref tiny_api_v2_cliente.py:
   ``funcao_busca`` loaders (ref :348);
 - each page's DataFrame is transformed, then MERGE-upserted into a
   versioned TableStore (idempotent sink ⇒ at-least-once delivery from
-  the watermark layer becomes effectively exactly-once);
+  the watermark layer becomes effectively exactly-once). A page costs
+  O(page): ``TableStore.upsert`` writes only its keep-latest rows as a
+  delta layer, and its record count comes from an Observation on the
+  same write, not a second evaluation;
+- when the step leaves its page loop (CONCLUIDO, or the page cap's
+  EM_ANDAMENTO) it folds the delta layers once (``TableStore.fold``),
+  so a table at rest — what dashboards and the COUNT(*) audit read —
+  is flat. An ERRO step leaves them: reads resolve them, and the next
+  run folds;
+- every page upsert and the fold commit against the version they read
+  (optimistic concurrency): a concurrent writer's commit makes the
+  step ERRO with ConcurrentWriteError instead of being overwritten,
+  and the next run resumes at that page;
 - page progress goes through PageCheckpoint (resume at saved+1,
   ref :183-223); the page cap leaves status EM_ANDAMENTO for the next
   run (ref :368-370); failures mark ERRO and halt the step without
@@ -25,7 +37,8 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
@@ -33,7 +46,6 @@ from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_RUNNING,
     PageCheckpoint,
 )
-from tinyerp_etl_spark.etl.merge import merge_upsert
 from tinyerp_etl_spark.etl.table_store import TableStore
 from tinyerp_etl_spark.etl.watermark import (
     SAFETY_DAYS_DEFAULT,
@@ -107,22 +119,26 @@ def run_entity_sync(
             if page_df is not None and cfg.transform is not None:
                 page_df = cfg.transform(page_df)
             n = 0
-            if page_df is not None:
-                merged = merge_upsert(
-                    cfg.store.read(), page_df, cfg.keys, cfg.order_by
+            if page_df is not None and not _provably_empty(page_df):
+                seen = Observation()
+                cfg.store.upsert(
+                    page_df.observe(seen, F.count(F.lit(1)).alias("n")),
+                    cfg.keys,
+                    cfg.order_by,
                 )
-                cfg.store.commit(merged)
-                n = page_df.count()
+                n = seen.get["n"]  # raw page rows, in-page duplicates included
             checkpoints.advance(cfg.name, page, total_pages, n)
             pages_done += 1
             records += n
             # termination: empty source or last page (ref :360)
             if total_pages == 0 or page >= total_pages:
+                cfg.store.fold()
                 checkpoints.finish(cfg.name, STATUS_DONE)
                 watermarks.commit(cfg.name, step_start)  # ref :363
                 return SyncResult(cfg.name, STATUS_DONE, pages_done, records, filter_ts)
             page += 1
         # page-cap exhaustion: leave work for the next run (ref :368-370)
+        cfg.store.fold()
         checkpoints.finish(cfg.name, STATUS_RUNNING)
         return SyncResult(cfg.name, STATUS_RUNNING, pages_done, records, filter_ts)
     except Exception as exc:  # halt step, don't fail siblings (ref :372-373)
@@ -131,6 +147,16 @@ def run_entity_sync(
         return SyncResult(
             cfg.name, STATUS_ERROR, pages_done, records, filter_ts, error=str(exc)
         )
+
+
+def _provably_empty(df: DataFrame) -> bool:
+    """True when the optimizer already reduced ``df`` to no rows.
+
+    The optimizer prunes an Observation over such a plan, so its
+    metrics never arrive and ``Observation.get`` would block forever.
+    Planning only: no Spark job."""
+    max_rows = df._jdf.queryExecution().optimizedPlan().maxRows()
+    return max_rows.isDefined() and max_rows.get() == 0
 
 
 def run_pipeline(

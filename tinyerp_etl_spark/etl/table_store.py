@@ -13,6 +13,23 @@ This is a deliberately minimal Delta-style commit protocol: versioned
 data dirs + an atomically-renamed ``_CURRENT`` pointer. At 100 TB the
 same layout works per-partition; only the pointer update is a
 single-writer point.
+
+Merge-on-read versions. ``upsert`` makes a keyed MERGE cost O(page):
+version N hard-links the previous version's files and writes only the
+page's keep-latest rows, as a delta layer beside them::
+
+    v{N}/part-*.parquet              base rows (links)
+    v{N}/_delta/gen={g}/part-*.parquet   one layer per upsert, g = the
+                                         version that wrote it (links
+                                         for g < N)
+    v{N}/_delta/_KEYS                 the MERGE key list (JSON)
+
+Spark's parquet listing skips ``_``-prefixed directories, so the base
+read never sees the layers. ``read_version`` resolves such a version
+as ``base ⋉̸ delta keys ∪ keep-latest(delta by g)`` — the same rows as
+``merge.merge_upsert`` applied page by page — and a version without
+``_delta`` reads as plain parquet. ``fold`` commits the resolved rows
+as a flat version; the sync pipeline does that once per step.
 """
 
 from __future__ import annotations
@@ -22,9 +39,13 @@ import json
 import os
 import shutil
 import tempfile
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+from tinyerp_etl_spark.etl.merge import keep_latest, merge_upsert
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -135,6 +156,9 @@ class TableStore:
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"v{v:06d}")
 
+    def _delta_dir(self, v: int) -> str:
+        return os.path.join(self._version_dir(v), "_delta")
+
     def exists(self) -> bool:
         return self.current_version() is not None
 
@@ -156,7 +180,30 @@ class TableStore:
         d = self._version_dir(version)
         if not os.path.isdir(d):
             raise ValueError(f"version {version} does not exist at {self.path}")
-        return self.spark.read.schema(self.schema).parquet(d)
+        base = self.spark.read.schema(self.schema).parquet(d)
+        delta = self._delta_dir(version)
+        if not os.path.isdir(delta):
+            return base
+        with open(os.path.join(delta, "_KEYS")) as f:
+            keys = json.load(f)
+        # one scan over every layer; a row's layer is the gen= directory
+        # of its file (partition discovery is off: the table may itself
+        # have a column named gen)
+        layers = (
+            self.spark.read.schema(self.schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(delta)
+            .withColumn(
+                "__gen",
+                F.regexp_extract("_metadata.file_path", r"/gen=(\d+)/", 1).cast("long"),
+            )
+        )
+        return merge_upsert(
+            base.withColumn("__gen", F.lit(0).cast("long")),
+            layers,
+            keys,
+            [F.col("__gen").desc()],
+        ).drop("__gen")
 
     def versions(self) -> list[int]:
         """All committed versions present on disk, ascending."""
@@ -363,13 +410,25 @@ class TableStore:
                 f"table at {self.path} advanced to v{base} since "
                 f"v{expected_version} was read; recompute and retry"
             )
+        if os.path.isdir(self._delta_dir(base)):
+            raise ValueError(
+                f"commit_append at {self.path}: v{base} has upsert delta "
+                "layers; fold() it first (an append cannot carry them)"
+            )
         if expected_version is None:
             expected_version = base
         staging = self._stage_write(new_rows, n_files, cluster_by)
-        # reference the base version's data files (AFTER the Spark
-        # write — overwrite mode clears the target dir). Spark part
-        # file names embed a per-job UUID, so base and batch names
-        # cannot collide; a collision is corruption, not a race.
+        self._link_files(base, staging)
+        return self._claim_version(staging, expected_version)
+
+    def _link_files(self, base: int, staging: str) -> None:
+        """Reference version ``base``'s parquet files from ``staging``
+        at the same relative paths, by hard link (copy when the
+        filesystem refuses links) — the manifest reuse behind
+        commit_append() and upsert(). Called AFTER the Spark write
+        (overwrite mode clears the target dir). Spark part file names
+        embed a per-job UUID, so base and batch names cannot collide; a
+        collision is corruption, not a race."""
         base_dir = self._version_dir(base)
         for root, _dirs, files in os.walk(base_dir):
             rel = os.path.relpath(root, base_dir)
@@ -383,15 +442,70 @@ class TableStore:
                 if os.path.exists(dst):
                     shutil.rmtree(staging, ignore_errors=True)
                     raise RuntimeError(
-                        f"commit_append name collision on {fn} at "
-                        f"{self.path} — base and batch part files must "
-                        "be distinct"
+                        f"name collision on {fn} at {self.path} — base "
+                        "and batch part files must be distinct"
                     )
                 try:
                     os.link(src, dst)
                 except OSError:
                     shutil.copy2(src, dst)  # EXDEV / no-hardlink FS
-        return self._claim_version(staging, expected_version)
+
+    def upsert(
+        self,
+        rows: DataFrame,
+        keys: Sequence[str],
+        order_by: Sequence[Column | str] | None = None,
+    ) -> int:
+        """MERGE ``rows`` on ``keys`` as the next version, writing only
+        the page — IO ∝ page, never ∝ table.
+
+        Reads the same as ``commit(merge_upsert(read(), rows, keys,
+        order_by))``, but the new version links the current version's
+        files and its earlier delta layers, and writes only
+        keep-latest(``rows``) as the layer ``_delta/gen={N}`` (module
+        docstring). Reads of the version pay the merge until ``fold()``
+        flattens it; the sync pipeline folds once per step.
+
+        Always optimistic, as ``commit_append``: the version is claimed
+        pinned to the version read here, so a commit landing while the
+        page is written raises ConcurrentWriteError instead of being
+        silently dropped. An empty table takes the page as version 1.
+        """
+        if self.partition_by:
+            raise ValueError(
+                f"upsert at {self.path}: partition_by stores have no delta "
+                "layout; commit(merge_upsert(...)) instead"
+            )
+        keys = list(keys)
+        base = self.current_version()
+        if base is not None and os.path.isdir(self._delta_dir(base)):
+            with open(os.path.join(self._delta_dir(base), "_KEYS")) as f:
+                if json.load(f) != keys:
+                    raise ValueError(
+                        f"upsert at {self.path}: keys {keys} differ from the "
+                        f"unfolded layers' keys; fold() first"
+                    )
+        expected = base or 0
+        layer = self._stage_write(keep_latest(rows, keys, order_by), None, None)
+        staging = tempfile.mkdtemp(dir=self.path, prefix=".staging-")
+        delta = os.path.join(staging, "_delta")
+        os.mkdir(delta)
+        os.rename(layer, os.path.join(delta, f"gen={expected + 1}"))
+        with open(os.path.join(delta, "_KEYS"), "w") as f:
+            json.dump(keys, f)
+        if base is not None:
+            self._link_files(base, staging)
+        return self._claim_version(staging, expected)
+
+    def fold(self) -> int | None:
+        """Flatten the current version's delta layers: one commit of
+        ``read()`` pinned to the version read (ConcurrentWriteError on
+        a race, as ``compact``). Returns the new version, or None when
+        the current version is already flat."""
+        v = self.current_version()
+        if v is None or not os.path.isdir(self._delta_dir(v)):
+            return None
+        return self.commit(self.read_version(v), expected_version=v)
 
     def data_file_count(self, version: int | None = None) -> int:
         """Number of parquet data files in a version (small-files gauge)."""

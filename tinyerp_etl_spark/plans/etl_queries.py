@@ -292,8 +292,8 @@ def incremental_pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = run_entity_sync(
             spark,
             sync,
-            WatermarkStore(spark, f"{scratch}/wm.parquet"),
-            PageCheckpoint(spark, f"{scratch}/ckpt.parquet"),
+            WatermarkStore(spark, f"{scratch}/wm.json"),
+            PageCheckpoint(spark, f"{scratch}/ckpt.json"),
         )
         assert result.status == "CONCLUIDO", result
         # materialize (distributed) before the scratch dir disappears
