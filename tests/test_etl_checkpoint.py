@@ -7,7 +7,6 @@ from datetime import datetime, timezone
 
 import pytest
 
-from tinyerp_etl_spark.etl import checkpoint
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
     STATUS_ERROR,
@@ -93,7 +92,7 @@ def test_control_state_survives_leftover_temp_and_interrupted_write(
     def crash(src, dst):
         raise OSError("crash before replace")
 
-    monkeypatch.setattr(checkpoint.os, "replace", crash)
+    monkeypatch.setattr(os, "replace", crash)
     with pytest.raises(OSError, match="crash"):
         cp.advance("pedidos", 4, 9, 10)
     with pytest.raises(OSError, match="crash"):
@@ -106,3 +105,14 @@ def test_control_state_survives_leftover_temp_and_interrupted_write(
     assert wm.get("pedidos") == t1
     # the interrupted writes left no temp files of their own
     assert sorted(os.listdir(tmp_path)) == [".cp.leftover", ".wm.leftover", "cp", "wm"]
+
+
+def test_control_state_in_the_parquet_format_fails_clearly(spark, tmp_path):
+    """A directory at a control-state path (the earlier parquet format)
+    is reported as such, not as an IsADirectoryError."""
+    for name in ("cp", "wm"):
+        os.makedirs(tmp_path / name)
+    with pytest.raises(ValueError, match="parquet format"):
+        PageCheckpoint(spark, str(tmp_path / "cp")).start("pedidos", "01/08/2026 00:00:00")
+    with pytest.raises(ValueError, match="parquet format"):
+        WatermarkStore(spark, str(tmp_path / "wm")).get("pedidos")

@@ -8,7 +8,6 @@ system and a page source that serves it in date-filtered pages.
 from __future__ import annotations
 
 import os
-import threading
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -218,9 +217,8 @@ def test_concurrent_commit_during_page_write_fails_step_and_loses_no_rows(
 
 
 def test_records_count_raw_page_rows_and_empty_pages_finish(spark, sf_dir, stores):
-    """records counts every raw page row, in-page duplicates included,
-    from the page's own write; a page the optimizer proves empty still
-    finishes (an Observation on such a plan is never filled)."""
+    """records counts every raw page row, in-page duplicates included;
+    pages with no rows — the last one included — still finish."""
     wm, cp, tgt = stores
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 30)
     pages = {
@@ -235,18 +233,28 @@ def test_records_count_raw_page_rows_and_empty_pages_finish(spark, sf_dir, store
         store=tgt,
         keys=["event_id"],
     )
-    out = {}
-    t = threading.Thread(
-        target=lambda: out.update(res=run_entity_sync(spark, cfg, wm, cp, now=NOW)),
-        daemon=True,
-    )
-    t.start()
-    t.join(timeout=300)
-    assert not t.is_alive(), "run_entity_sync hung on an empty page"
-    res = out["res"]
+    res = run_entity_sync(spark, cfg, wm, cp, now=NOW)
     assert (res.status, res.pages, res.records) == (STATUS_DONE, 4, 40)
     assert cp.progress("events").registros_processados == 40
+    assert not _has_delta(tgt)
     assert _sorted_rows(tgt.read()) == _sorted_rows(ev)
+
+
+def test_single_page_step_commits_one_flat_version(spark, sf_dir, stores):
+    """A one-page step writes no delta layer: its page merges flat in
+    one commit, as a plain MERGE does."""
+    wm, cp, tgt = stores
+    ev = load_table(spark, sf_dir, "events")
+    tgt.commit(ev.filter(F.col("event_id") < 50))
+    page = ev.filter(F.col("event_id").between(40, 59))
+    cfg = EntitySync(
+        name="events", source=lambda _ts, _page: (page, 1), store=tgt, keys=["event_id"]
+    )
+    res = run_entity_sync(spark, cfg, wm, cp, now=NOW)
+    assert (res.status, res.records) == (STATUS_DONE, 20)
+    assert tgt.versions() == [1, 2]
+    assert not _has_delta(tgt)
+    assert _sorted_rows(tgt.read()) == _sorted_rows(ev.filter(F.col("event_id") < 60))
 
 
 def run_full_expected(spark, sf_dir):

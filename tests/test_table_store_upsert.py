@@ -31,7 +31,7 @@ def _store(spark, tmp_path, name="t", partition_by=None):
 
 
 def _rows(df):
-    return sorted(tuple(r) for r in df.select("k", "v", "ver").collect())
+    return sorted((tuple(r) for r in df.select("k", "v", "ver").collect()), key=str)
 
 
 def _base(spark, n):
@@ -62,11 +62,17 @@ def _parquet_inodes(d):
 
 
 def test_delta_versions_read_as_merge_upsert_and_fold_flat(spark, tmp_path):
-    st = _store(spark, tmp_path)
-    st.commit(_base(spark, 200), n_files=2)
-    want = {1: _base(spark, 200)}
+    """Also under a root inside a ``gen=N`` directory (a layer's gen is
+    its own directory's), and with NULL keys, which a MERGE never
+    matches: every page's NULL-key row survives the later pages."""
+    st = _store(spark, tmp_path, name="gen=7/t")
+    base = _base(spark, 200).unionByName(local_df(spark, [(None, "bnull", 0)], SCHEMA))
+    st.commit(base, n_files=2)
+    want = {1: base}
     for p in (1, 2, 3):
-        page = _page(spark, p, 200)
+        page = _page(spark, p, 200).unionByName(
+            local_df(spark, [(None, f"null{p}", p), (None, f"null{p}", p)], SCHEMA)
+        )
         v = st.upsert(page, KEYS, _latest())
         assert v == p + 1 and _has_delta(st, v)
         want[v] = merge_upsert(want[v - 1], page, KEYS, _latest())
@@ -83,6 +89,7 @@ def test_delta_versions_read_as_merge_upsert_and_fold_flat(spark, tmp_path):
     assert st.fold() == 5
     assert not _has_delta(st, 5)
     assert _rows(st.read()) == _rows(want[4])
+    assert len([r for r in _rows(st.read()) if r[0] is None]) == 4
     assert st.fold() is None  # already flat: no commit
     assert st.current_version() == 5
 
@@ -94,6 +101,26 @@ def test_upsert_into_empty_store_and_without_order(spark, tmp_path):
     assert st.upsert(local_df(spark, rows, SCHEMA), KEYS) == 1
     assert _has_delta(st, 1)
     assert _rows(st.read()) == [(1, "a", 1), (2, "b", 1)]
+
+
+def test_upsert_fold_leaves_the_table_flat(spark, tmp_path):
+    """``fold=True`` (a sync step's last page) commits the merge as one
+    flat version, on a flat table and with the layers folded in."""
+    st = _store(spark, tmp_path)
+    st.commit(_base(spark, 100), n_files=1)
+    want = _base(spark, 100)
+    for p in (1, 2, 3):
+        page = _page(spark, p, 100)
+        v = st.upsert(page, KEYS, _latest(), fold=p != 2)
+        want = merge_upsert(want, page, KEYS, _latest())
+        assert _rows(st.read()) == _rows(want)
+    assert v == 4
+    assert [_has_delta(st, x) for x in (2, 3, 4)] == [False, True, False]
+    empty = _store(spark, tmp_path, name="e")
+    rows = local_df(spark, [(1, "a", 1), (1, "b", 2)], SCHEMA)
+    assert empty.upsert(rows, KEYS, _latest(), fold=True) == 1
+    assert not _has_delta(empty, 1)
+    assert _rows(empty.read()) == [(1, "b", 2)]
 
 
 def test_add_column_between_upserts_reads_old_layers_with_nulls(spark, tmp_path):
@@ -146,7 +173,8 @@ def test_upsert_on_partitioned_store_raises(spark, tmp_path):
     assert st.versions() == [1]
 
 
-def test_upsert_loses_to_commit_landing_during_its_write(spark, tmp_path):
+@pytest.mark.parametrize("fold", [False, True])
+def test_upsert_loses_to_commit_landing_during_its_write(spark, tmp_path, fold):
     """The version is claimed pinned to the version read: a commit that
     lands while the page is written wins, and the upsert raises."""
     st = _store(spark, tmp_path)
@@ -160,7 +188,7 @@ def test_upsert_loses_to_commit_landing_during_its_write(spark, tmp_path):
 
     st._stage_write = racing
     with pytest.raises(ConcurrentWriteError):
-        st.upsert(local_df(spark, [(1, "x", 1)], SCHEMA), KEYS, _latest())
+        st.upsert(local_df(spark, [(1, "x", 1)], SCHEMA), KEYS, _latest(), fold=fold)
     assert st.versions() == [1, 2]
     assert (7, "o", 0) in _rows(st.read())
     assert not [d for d in os.listdir(st.path) if d.startswith(".staging")]

@@ -14,48 +14,25 @@ and its three operations:
 In the Structured Streaming mirror this is exactly the checkpoint
 offset log; in batch mode it is control state, not data — a few rows
 — so it is a JSON file written on the driver with no Spark job: a
-temp file beside it, then ``os.replace``. A reader sees the old rows
-or the new ones, never none (a crash before the replace leaves only an
-ignored temp file).
+temp file beside it, then ``os.replace`` (etl.atomic_file). A reader
+sees the old rows or the new ones, never none (a crash before the
+replace leaves only an ignored temp file).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 
+from tinyerp_etl_spark.etl.atomic_file import read_json, write_atomic
+
 STATUS_PENDING = "PENDENTE"
 STATUS_RUNNING = "EM_ANDAMENTO"
 STATUS_ERROR = "ERRO"
 STATUS_DONE = "CONCLUIDO"
-
-
-def write_json_atomic(path: str, obj) -> None:
-    """Replace ``path`` with ``obj`` as JSON: temp file, then os.replace."""
-    parent = os.path.dirname(os.path.abspath(path))
-    os.makedirs(parent, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=parent, prefix=f".{os.path.basename(path)}.")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(obj, f)
-        os.replace(tmp, path)
-    except BaseException:
-        os.unlink(tmp)
-        raise
-
-
-def read_json(path: str, default):
-    """The JSON value at ``path``, or ``default`` when there is no file."""
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return default
 
 
 @dataclass
@@ -104,7 +81,7 @@ class PageCheckpoint:
         cur["registros_processados"] += add_records
         cur["timestamp_ultima_pagina"] = now
         rows[process] = cur
-        write_json_atomic(self.path, rows)
+        write_atomic(self.path, json.dumps(rows))
 
     # -- reference-contract operations --------------------------------
 

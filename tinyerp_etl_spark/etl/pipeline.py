@@ -10,13 +10,13 @@ Re-expresses ``executar_etapa_paginada`` (ref tiny_api_v2_cliente.py:
   versioned TableStore (idempotent sink ⇒ at-least-once delivery from
   the watermark layer becomes effectively exactly-once). A page costs
   O(page): ``TableStore.upsert`` writes only its keep-latest rows as a
-  delta layer, and its record count comes from an Observation on the
-  same write, not a second evaluation;
-- when the step leaves its page loop (CONCLUIDO, or the page cap's
-  EM_ANDAMENTO) it folds the delta layers once (``TableStore.fold``),
+  delta layer;
+- the step folds once: its last page — or the page cap's — merges
+  flat with the layers before it in one commit (``upsert(fold=True)``),
   so a table at rest — what dashboards and the COUNT(*) audit read —
-  is flat. An ERRO step leaves them: reads resolve them, and the next
-  run folds;
+  is flat, and a single-page step writes no layer (one table rewrite,
+  as a plain MERGE). An ERRO step leaves its layers: reads resolve
+  them, and the next run folds;
 - every page upsert and the fold commit against the version they read
   (optimistic concurrency): a concurrent writer's commit makes the
   step ERRO with ConcurrentWriteError instead of being overwritten,
@@ -37,8 +37,7 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from tinyerp_etl_spark.etl.checkpoint import (
     STATUS_DONE,
@@ -118,27 +117,29 @@ def run_entity_sync(
             page_df, total_pages = cfg.source(filter_ts, page)
             if page_df is not None and cfg.transform is not None:
                 page_df = cfg.transform(page_df)
+            # termination: empty source or last page (ref :360)
+            last = total_pages == 0 or page >= total_pages
             n = 0
-            if page_df is not None and not _provably_empty(page_df):
-                seen = Observation()
+            if page_df is not None:
+                # the step's last page (or the page cap's) merges flat
                 cfg.store.upsert(
-                    page_df.observe(seen, F.count(F.lit(1)).alias("n")),
+                    page_df,
                     cfg.keys,
                     cfg.order_by,
+                    fold=last or page == cfg.max_pages,
                 )
-                n = seen.get["n"]  # raw page rows, in-page duplicates included
+                n = page_df.count()
             checkpoints.advance(cfg.name, page, total_pages, n)
             pages_done += 1
             records += n
-            # termination: empty source or last page (ref :360)
-            if total_pages == 0 or page >= total_pages:
-                cfg.store.fold()
+            if last:
+                cfg.store.fold()  # a no-op unless the last page was None
                 checkpoints.finish(cfg.name, STATUS_DONE)
                 watermarks.commit(cfg.name, step_start)  # ref :363
                 return SyncResult(cfg.name, STATUS_DONE, pages_done, records, filter_ts)
             page += 1
         # page-cap exhaustion: leave work for the next run (ref :368-370)
-        cfg.store.fold()
+        cfg.store.fold()  # a no-op unless the capped page was None
         checkpoints.finish(cfg.name, STATUS_RUNNING)
         return SyncResult(cfg.name, STATUS_RUNNING, pages_done, records, filter_ts)
     except Exception as exc:  # halt step, don't fail siblings (ref :372-373)
@@ -147,16 +148,6 @@ def run_entity_sync(
         return SyncResult(
             cfg.name, STATUS_ERROR, pages_done, records, filter_ts, error=str(exc)
         )
-
-
-def _provably_empty(df: DataFrame) -> bool:
-    """True when the optimizer already reduced ``df`` to no rows.
-
-    The optimizer prunes an Observation over such a plan, so its
-    metrics never arrive and ``Observation.get`` would block forever.
-    Planning only: no Spark job."""
-    max_rows = df._jdf.queryExecution().optimizedPlan().maxRows()
-    return max_rows.isDefined() and max_rows.get() == 0
 
 
 def run_pipeline(

@@ -27,14 +27,18 @@ page's keep-latest rows, as a delta layer beside them::
 Spark's parquet listing skips ``_``-prefixed directories, so the base
 read never sees the layers. ``read_version`` resolves such a version
 as ``base ⋉̸ delta keys ∪ keep-latest(delta by g)`` — the same rows as
-``merge.merge_upsert`` applied page by page — and a version without
-``_delta`` reads as plain parquet. ``fold`` commits the resolved rows
-as a flat version; the sync pipeline does that once per step.
+``merge.merge_upsert`` applied page by page, NULL keys included (a
+MERGE never matches one, so every layer keeps its own) — and a
+version without
+``_delta`` reads as plain parquet. ``fold()`` commits the resolved
+rows as a flat version; the sync pipeline folds once per step, with
+its last page (``upsert(..., fold=True)``).
 """
 
 from __future__ import annotations
 
 import errno
+import functools
 import json
 import os
 import shutil
@@ -45,6 +49,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
 
+from tinyerp_etl_spark.etl.atomic_file import write_atomic
 from tinyerp_etl_spark.etl.merge import keep_latest, merge_upsert
 
 
@@ -103,10 +108,7 @@ class TableStore:
             return None
 
     def _save_schema(self) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._SCHEMA.")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self.schema.jsonValue(), f)
-        os.replace(tmp, self._schema_file)
+        write_atomic(self._schema_file, json.dumps(self.schema.jsonValue()))
 
     def add_column(self, name: str, dtype: str) -> bool:
         """ALTER TABLE ADD COLUMN IF NOT EXISTS — idempotent widening.
@@ -187,23 +189,31 @@ class TableStore:
         with open(os.path.join(delta, "_KEYS")) as f:
             keys = json.load(f)
         # one scan over every layer; a row's layer is the gen= directory
-        # of its file (partition discovery is off: the table may itself
-        # have a column named gen)
+        # its file sits in (partition discovery is off: the table may
+        # itself have a column named gen)
+        gen = F.regexp_extract(
+            "_metadata.file_path", r"/_delta/gen=(\d+)/[^/]+$", 1
+        ).cast("long")
         layers = (
             self.spark.read.schema(self.schema)
             .option("recursiveFileLookup", "true")
             .parquet(delta)
-            .withColumn(
-                "__gen",
-                F.regexp_extract("_metadata.file_path", r"/gen=(\d+)/", 1).cast("long"),
-            )
+            .withColumn("__gen", gen)
         )
-        return merge_upsert(
-            base.withColumn("__gen", F.lit(0).cast("long")),
-            layers,
-            keys,
+        # a MERGE never matches a NULL key (its anti-join is an
+        # equi-join), so each layer's NULL-key rows outlive the later
+        # layers, as merge_upsert page by page keeps them: keep-latest
+        # splits those rows by layer as well
+        null_key = functools.reduce(
+            lambda a, b: a | b, [F.col(k).isNull() for k in keys]
+        )
+        latest = keep_latest(
+            layers.withColumn("__null_gen", F.when(null_key, F.col("__gen"))),
+            [*keys, "__null_gen"],
             [F.col("__gen").desc()],
-        ).drop("__gen")
+        ).drop("__null_gen", "__gen")
+        survivors = base.join(latest.select(*keys), keys, "left_anti")
+        return survivors.unionByName(latest)
 
     def versions(self) -> list[int]:
         """All committed versions present on disk, ascending."""
@@ -347,10 +357,7 @@ class TableStore:
                     ) from None
                 v += 1  # legacy path: take the next free version
         # atomic pointer swap: write-temp + rename is atomic on POSIX
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._CURRENT.")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._pointer)
+        write_atomic(self._pointer, str(v))
         return v
 
     def commit_append(
@@ -455,6 +462,7 @@ class TableStore:
         rows: DataFrame,
         keys: Sequence[str],
         order_by: Sequence[Column | str] | None = None,
+        fold: bool = False,
     ) -> int:
         """MERGE ``rows`` on ``keys`` as the next version, writing only
         the page — IO ∝ page, never ∝ table.
@@ -464,7 +472,10 @@ class TableStore:
         files and its earlier delta layers, and writes only
         keep-latest(``rows``) as the layer ``_delta/gen={N}`` (module
         docstring). Reads of the version pay the merge until ``fold()``
-        flattens it; the sync pipeline folds once per step.
+        flattens it. ``fold=True`` commits that merge as one flat
+        version instead, earlier layers folded in — a sync step's last
+        page. On a flat table that is the plain MERGE rewrite, so a
+        single-page step writes no layer.
 
         Always optimistic, as ``commit_append``: the version is claimed
         pinned to the version read here, so a commit landing while the
@@ -486,6 +497,12 @@ class TableStore:
                         f"unfolded layers' keys; fold() first"
                     )
         expected = base or 0
+        if fold:
+            if base is None:
+                merged = keep_latest(rows, keys, order_by)
+            else:
+                merged = merge_upsert(self.read_version(base), rows, keys, order_by)
+            return self.commit(merged, expected_version=expected)
         layer = self._stage_write(keep_latest(rows, keys, order_by), None, None)
         staging = tempfile.mkdtemp(dir=self.path, prefix=".staging-")
         delta = os.path.join(staging, "_delta")

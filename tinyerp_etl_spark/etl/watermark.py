@@ -19,7 +19,7 @@ Watermarks are per-process scalars — control state, not data — so the
 resolution logic is driver-side Python on purpose; only the synthetic
 bootstrap's MAX runs distributed. The store is one JSON file of
 ``{process: UTC ISO timestamp}`` written on the driver with no Spark
-job, atomically (temp file + ``os.replace``, as etl.checkpoint); commit
+job, atomically (temp file + ``os.replace``, etl.atomic_file); commit
 semantics mirror the reference: the committed timestamp is the
 *step start time* (ref :326, :363) so in-flight changes are re-read
 next run — at-least-once, made exactly-once-effective by the
@@ -28,12 +28,13 @@ idempotent MERGE sink (etl.merge).
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tinyerp_etl_spark.etl.checkpoint import read_json, write_json_atomic
+from tinyerp_etl_spark.etl.atomic_file import read_json, write_atomic
 
 SAFETY_DAYS_DEFAULT = 60  # DIAS_JANELA_SEGURANCA (ref :49)
 
@@ -54,7 +55,7 @@ class WatermarkStore:
         """Upsert (process, ts) — the ON CONFLICT DO UPDATE at ref :122-123."""
         rows = read_json(self.path, {})
         rows[process] = ts.astimezone(timezone.utc).isoformat()
-        write_json_atomic(self.path, rows)
+        write_atomic(self.path, json.dumps(rows))
 
 
 def resolve_filter_timestamp(
